@@ -22,9 +22,12 @@ from __future__ import annotations
 import logging
 import os
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kafka_etl_automation_spark.session import observation_or_none
 
 _LOG = logging.getLogger(__name__)
 
@@ -533,10 +536,10 @@ _FLOOD_ROWS_PER_PARTITION = 12_500_000
 # stats probe, the bucket-size histogram is skipped when the WORST-CASE
 # kept emission volume (banded_rows x (cap-1) / 2) sits at or under this
 # bound — then the flood policy is settled conservatively (worst case is
-# already under the ENOSPC ceiling) and the packed-reduction index bound
-# is the cap itself. Equal to the flood ceiling, but a separate knob so
-# tests can exercise the full-audit path without also tripping the
-# flood abort.
+# already under the ENOSPC ceiling) and the largest kept bucket is
+# bounded by min(cap, banded_rows). Equal to the flood ceiling, but a
+# separate constant so tests can exercise the full-audit path without
+# also tripping the flood abort.
 _AUDIT_SKIP_MAX_WORST = _FLOOD_NARROW_ROWS
 
 
@@ -768,189 +771,107 @@ def minhash_lsh_pairs(
     members: DataFrame | None = None,
     verify: str | None = None,
     max_labels: int | None = None,
-    auto_work_per_row: float | None = None,
-    once_reduction: str = "packed",
 ) -> DataFrame:
-    """Near-duplicate pairs via MinHash + banded LSH, verified with exact
-    Jaccard over the 64-bit shingle-hash sets so the output has no false
-    positives beyond hash-collision odds (~|sh|²/2⁶⁴ per pair — negligible
-    and deterministic; recall is the probabilistic part, ~ 1-(1-t^r)^b).
+    """Near-duplicate pairs ``(id_a < id_b, jaccard)`` via MinHash + banded
+    LSH, verified with exact Jaccard over the 64-bit shingle-hash sets so
+    the output has no false positives beyond hash-collision odds
+    (~|sh|²/2⁶⁴ per pair — negligible and deterministic; recall is the
+    probabilistic part, ~ 1-(1-t^r)^b).
+
+    This function validates, collapses, and fans out; the work runs in five
+    named stages: ``_lsh_signatures`` (inputs and signatures),
+    ``_lsh_banded`` (banding), ``_lsh_cap_audit`` (cap audit and policy),
+    ``_lsh_candidates`` (candidate enumeration), and ``_lsh_verify_pairs``
+    / ``_lsh_verify_grouped`` (verification).
 
     ``candidate_scope``:
-      - ``"all"`` (default): every in-bucket pair is a candidate — C(n,2)
-        per bucket. The PAIR-REPORT contract: use when the pairs
-        themselves are the output (ext_minhash_lsh).
-      - ``"star"``: only (bucket-min, member) edges — n-1 per bucket, NO
-        self-join at all (the min rides the same window the size filter
-        uses). The CLUSTERING contract: connected components over star
+      - ``"all"`` (default): every in-bucket pair is a candidate — C(c,2)
+        per bucket. The PAIR-REPORT contract (ext_minhash_lsh).
+      - ``"star"``: only (bucket-min, member) edges — c-1 per bucket, no
+        self-join. The CLUSTERING contract: connected components over star
         edges equal those over all edges whenever each bucket's members
-        are similar to its min (dup families are star/clique-shaped);
-        a chain a~b~c whose ends meet only through b in a single bucket
-        can split, so star trades a little recall for candidate counts
-        LINEAR in corpus size. The r06 probe measured the all-pairs
-        rep graph at 1.76M -> 20.0M verified pairs for 3.3x docs
-        (quadratic in near-dup family size) with CC iterations constant;
-        star is what makes ext_dedup_canonical_lsh documents-linear.
-        Precision is unchanged — star candidates are exact-verified too.
+        are similar to its min (dup families are star/clique-shaped); a
+        chain a~b~c whose ends meet only through b in a single bucket can
+        split, so star trades a little recall for candidate counts LINEAR
+        in corpus size (what makes ext_dedup_canonical_lsh
+        documents-linear). Precision is unchanged.
 
     ``bipartite``: optional Column over ``df``'s columns (e.g.
     ``text.hash_split("text")``). Only candidates whose two sides DIFFER
-    on this label are emitted. For cross-split decontamination the
-    downstream filter discards same-split pairs anyway, so this is
-    output-identical and removes the within-split (train-train) share —
-    the quadratic bulk — from the self-join. Mutually exclusive with
-    ``candidate_scope="star"``. With ``collapse_exact`` the label must be
-    CONTENT-determined (a function of ``text_col``, like ``hash_split``):
-    the label is evaluated once per distinct-text rep and inherited by
-    every member, which is exact iff identical texts share a label.
+    on this label are emitted — output-identical for cross-split
+    decontamination, minus the within-split quadratic bulk. Mutually
+    exclusive with ``candidate_scope="star"``. With ``collapse_exact`` the
+    label is evaluated once per distinct-text rep, which is exact only for
+    content-determined labels — attest that with ``content_keyed=True``.
+    ``max_labels``: caller attestation that the label takes at most this
+    many distinct values; with 2 (the hash_split contracts) grouped
+    verification skips its within-rest-block branch at plan time.
 
-    ``verify`` (default ``None`` = CONTRACT-AWARE: ``"pairs"`` for
-    ``candidate_scope="star"``, ``"grouped"`` otherwise — the r10 octave
-    ladder measured the crossover, BENCH_SCALE.md round 10):
-      - ``"pairs"`` (the r09 shape; the star default): distinct candidate
-        pairs re-join both signature sets — each surviving candidate
-        ships TWO ~|sh|-sized array copies through the verify joins, so
-        verify shuffle bytes are quadratic in bucket occupancy (the
-        measured 2700x ceiling: 1.3e9 surviving pairs x ~750B of sets ≈
-        1 TB of shuffle, ENOSPC — VERDICT r09 #1). Star's candidate
-        volume is LINEAR by construction (few distinct pairs per doc
-        after the cross-band distinct), so shipping two sets per
-        DISTINCT pair beats grouped's one-copy-per-surviving-membership
-        (~bands per doc) plus its per-band re-verification — tight dup
-        families at the dedup threshold co-occur in most of the 16
-        r=4 bands, so grouped re-intersects each star edge up to 16x:
-        measured 16.5s vs 31.8s at 30x and 46.3s vs 112.7s at 300x on
-        the keep-list pipeline.
-      - ``"grouped"`` (per-BUCKET grouped verification with ONCE-PER-PAIR
-        Jaccard — VERDICT r10 #1; the default for the all-pairs and
-        bipartite contracts): surviving bucket members (bucket size in
-        [2, max_bucket]) join their hash set ONCE PER BUCKET MEMBERSHIP
-        (<= bands copies per doc — LINEAR in corpus size), aggregate to
-        one row per bucket holding the bucket's c sets, then enumeration
-        and verification SPLIT: the bucket rows first emit NARROW
-        (id_a, id_b, location) candidates — ids and array indices only,
-        the sh arrays stay in the bucket row — a groupBy reduces each
-        pair to its MINIMUM co-occurring band (min over a
-        (band, bkey, i, j) struct), and a narrow join back to the bucket
-        rows on (band, bkey) — partition-aligned with the aggregation,
-        so only the pair side shuffles — runs exact Jaccard EXACTLY ONCE
-        per distinct pair via element_at on the min band's array. The
-        r10 shape re-intersected each pair once per co-occurring band
-        (tight families co-occur in most of 16 bands — the bulk of the
-        compute-super-linear 2700x wall); the min-band reduction trades
-        that for one narrow shuffle, linear in candidate emissions.
-        Value-identical to "pairs" by construction — pinned by
-        tests/test_operators.py::test_grouped_verify_matches_pairs.
-      - ``"grouped_perband"`` (the r10 per-band-recompute shape, kept as
-        the A/B control): identical membership shipping and bucket-row
-        aggregation, but each bucket enumerates AND Jaccard-verifies its
-        own pairs inline, so a pair co-occurring in k bands is
-        re-intersected k times before the final distinct() collapses the
-        identical rows. Measured r10: gate-SF A/B minhash all-pairs
-        3.90->3.81s, canonical decon 9.25->8.14s vs pairs; 2700x decon
-        1447.7s on ~25 GB scratch where pairs ENOSPC'd ~1 TB.
+    ``sig_source`` (shared-signature mode): a pre-built
+    ``signature_sets`` frame ``(id, sh, mh0..mh{num_hashes-1})``; the
+    caller owns collapse (``members`` for the fan-out) and labels
+    (``bipartite_col``, a column on ``sig_source``).
 
-    ``once_reduction`` (``"packed"`` default / ``"struct"``): how the
-    once-per-pair shape reduces each pair to its minimum co-occurring
-    band. ``"packed"`` bit-packs (band, w, i, j) into one long and pairs
-    ``min(packed)`` with ``min_by(bkey, packed)`` — both buffers
-    primitive, so the reduction compiles to HashAggregate with map-side
-    partial combine instead of the struct-min's SortAggregate over the
-    full narrow candidate stream (VERDICT r11 #2; the sort was the
-    dominant remaining flood-octave cost). ``"struct"`` is the r11 A/B
-    control; both are value-identical (same row selected — see the
-    in-line proof) and pinned equal by test_grouped_verify_matches_pairs.
-    Packed requires bands <= 256 and max kept bucket < 2^27 (checked
-    against the audit histogram at plan time; falls back to struct).
-
-    ``auto_work_per_row``: override the ``max_bucket="auto"`` budget
-    (default ``_AUTO_WORK_PER_ROW`` = 64 emissions per banded row).
-
-    ``max_labels``: optional caller attestation that the bipartite label
-    column takes at most this many distinct values; with 2 (the
-    train/eval hash_split contracts) grouped verification skips its
-    within-rest-block enumeration branch at plan time. Only valid with a
-    bipartite label; never inferred from data.
+    ``verify`` (default ``None`` = contract-aware: ``"pairs"`` for star,
+    ``"grouped"`` otherwise — the crossover measured in BENCH_SCALE.md
+    round 10):
+      - ``"pairs"``: distinct candidate pairs re-join both signature sets.
+        Wins when distinct candidates per doc are few (star); its verify
+        shuffle is quadratic in bucket occupancy otherwise.
+      - ``"grouped"``: each kept bucket member ships its hash set once per
+        membership (<= bands copies per doc) into one row per bucket;
+        enumeration emits NARROW candidates (ids plus a bit-packed
+        (band, block, i, j) location), a hash aggregate reduces each pair
+        to its minimum co-occurring band, and exact Jaccard runs once per
+        distinct pair against that bucket row. Needs ``bands <= 256``
+        (validated) and kept buckets under 2^27 members (checked against
+        the audit at plan time). Value-identical to ``"pairs"`` — pinned
+        by tests/test_operators.py::test_grouped_verify_matches_pairs.
+    The measured history of the removed r10 per-band and r11
+    struct-reduction control shapes is in BENCH_SCALE.md (r10/r11) and
+    OPTIMIZATION_r12.md.
 
     ``max_bucket`` is a SKEW GUARD, not a free parameter — a bucket is
-    dropped wholesale when it overflows, and at duplicate-heavy corpora
-    the overflowing buckets ARE the duplicate families. Measured
-    (BENCH_SCALE.md r11 cap-recall): a fixed max_bucket=1000 cost 0% of
-    true merges at 300x and 0.5% at 900x (family size < cap), but 50% of
-    merges / 59% of truly contaminated evals at 2700x (family size
-    ~2700 > cap). A fixed cap is therefore a wrong-output default on
-    realistic corpora (VERDICT r11 #1), so the default is:
+    dropped wholesale when it overflows, and at duplicate-heavy corpora the
+    overflowing buckets ARE the duplicate families (BENCH_SCALE.md r11
+    cap-recall: a fixed 1000 cost 50% of true merges at 2700x).
+      - ``"auto"`` (default): the bucket-size audit measures the uncapped
+        candidate-emission volume BEFORE enumeration; up to
+        ``_AUTO_WORK_PER_ROW`` (64) emissions per banded row the run is
+        uncapped. Past that budget (boilerplate floods of dissimilar docs)
+        the largest cap whose kept volume fits is chosen, with a WARN.
+      - ``None``: explicitly uncapped.
+      - an ``int``: a hard cap; size it ABOVE the expected duplicate
+        family size. The audit WARNs on any bite whenever the worst-case
+        kept volume — banded_rows x (cap-1)/2 — exceeds the flood
+        ceiling; below that bound the histogram job is skipped and a
+        biting cap is NOT warned — pass ``stats=`` or use ``"auto"`` for
+        always-audited runs.
+    Grouped verification also applies the flood policy
+    (``_flood_escalation``) to the audited kept volume.
 
-      - ``"auto"`` (default): the always-on bucket-size audit measures
-        the uncapped candidate-emission volume BEFORE enumeration; if it
-        is at most ``auto_work_per_row`` (default 64) emissions per
-        banded row — i.e. the work is corpus-LINEAR up to a constant —
-        the run is uncapped and no family is ever dropped. Only when
-        in-bucket quadratic growth pushes past that scale-free budget
-        (boilerplate floods: huge buckets of DISSIMILAR docs) does the
-        guard engage, choosing the LARGEST cap whose kept emission
-        volume fits the budget and WARNing with the dropped counts.
-        Duplicate families grow the budget's denominator too (their
-        members are banded rows), so family-heavy corpora stay uncapped
-        — measured at 2700x: 4.9e9 uncapped emissions ≈ 11 rows/banded
-        row, well under the default budget, and the uncapped run
-        completes under grouped verification.
-      - ``None``: explicitly uncapped — no size filter, audit is
-        informational only. (Before r12 ``None`` silently emitted ZERO
-        pairs — the bsz <= NULL comparison filtered every bucket row —
-        ADVICE r11 medium; now it is the documented uncapped spelling.)
-      - an ``int``: a hard cap, for cross-round determinism pins and
-        corpora whose flood shape is known. Size it ABOVE the expected
-        duplicate family size. The audit runs (and WARNs on any bite)
-        whenever the worst-case kept volume — banded_rows x (cap-1)/2 —
-        exceeds the flood ceiling, which covers every corpus where a cap
-        has ever measurably bitten; below that bound the histogram job is
-        skipped at build time (r13: one less aggregation pass per
-        operator) and a biting cap is NOT warned — pass ``stats=`` or use
-        ``"auto"`` for always-audited runs.
+    ``collapse_exact`` (default on) runs the pipeline on DISTINCT texts
+    only and fans verified pairs back out to members
+    (`_exact_text_collapse`): identical texts have identical signatures, so
+    the expansion reproduces the same pairs and scores while candidate
+    generation stops being quadratic in exact-dup-cluster size.
+    ``max_bucket`` then counts distinct texts per bucket.
 
-    ``collapse_exact`` (default on — the deployable shape) runs the whole
-    LSH pipeline on DISTINCT texts only and fans verified pairs back out
-    to members (`_exact_text_collapse`): identical texts have identical
-    signatures, so the expansion reproduces the same pairs with the same
-    scores while candidate generation stops being quadratic in
-    exact-dup-cluster size (the 100x scale-proof's super-linear blowup).
-    One intended semantic change: ``max_bucket`` now counts distinct
-    texts per bucket, so duplicate multiplicity alone can no longer evict
-    a bucket — strictly better recall at the cap boundary.
-
-    Plan shape (deliberately few exchanges — an earlier version ran
-    signatures through an interpreted higher-order-function projection and
-    verification through a second inverted-index self-join, ~12 shuffles
-    plus ~25µs/shingle of non-codegen expression overhead):
-
-      posexplode tokens -> window leads -> shingle-hash rows (codegen)
-        -> ONE per-doc aggregation: collect_set(sh) + all 64 mins
-           [persisted, one row per doc]
-        -> 16 band keys as pure projections -> explode bands [persisted]
-        -> bucket-size skew filter (max_bucket) -> bucket self-join
-        -> distinct candidate pairs
-        -> join each side back to its hash set -> array_intersect Jaccard
-
-    Shuffles: the window sort (reused by the aggregation), bucket sizing,
-    the self-join, distinct, and the two verification joins.
+    ``stats``: optional dict, filled with the audit's numbers and the
+    distinct candidate count (one extra job; tools/dedup_probe.py).
     """
-    from pyspark import StorageLevel
-
     if candidate_scope not in ("all", "star"):
         raise ValueError(
             f"candidate_scope must be 'all' or 'star', got {candidate_scope!r}"
         )
     if verify is None:
         verify = "pairs" if candidate_scope == "star" else "grouped"
-    if verify not in ("pairs", "grouped", "grouped_perband"):
+    if verify not in ("pairs", "grouped"):
+        raise ValueError(f"verify must be 'pairs' or 'grouped', got {verify!r}")
+    if verify == "grouped" and bands > 256:
         raise ValueError(
-            "verify must be 'pairs', 'grouped', or 'grouped_perband', "
-            f"got {verify!r}"
-        )
-    if once_reduction not in ("packed", "struct"):
-        raise ValueError(
-            f"once_reduction must be 'packed' or 'struct', got {once_reduction!r}"
+            f"verify='grouped' packs the band id into 8 bits: bands must be "
+            f"<= 256, got {bands}"
         )
     if isinstance(max_bucket, str):
         if max_bucket != "auto":
@@ -961,13 +882,8 @@ def minhash_lsh_pairs(
     elif max_bucket is not None and max_bucket < 2:
         raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
     if max_labels is not None:
-        # Caller ATTESTATION that the bipartite label column takes at most
-        # this many distinct values (e.g. 2 for text.hash_split's binary
-        # train/eval). With <=2, grouped verification's within-rest-block
-        # enumeration branch is skipped at PLAN time — it can only emit
-        # for buckets holding >2 distinct labels, impossible under the
-        # attestation. Wrong attestation = silently dropped cross-label
-        # pairs among non-min labels, so this is opt-in, never inferred.
+        # Opt-in, never inferred: a wrong attestation silently drops
+        # cross-label pairs among non-min labels.
         if bipartite is None and bipartite_col is None:
             raise ValueError("max_labels is only meaningful with a bipartite label")
         if max_labels < 2:
@@ -978,13 +894,6 @@ def minhash_lsh_pairs(
             "star edges all touch the bucket min regardless of label"
         )
     if sig_source is not None:
-        # Shared-signature mode (VERDICT r07 #2): the caller pre-built the
-        # (id, sh, mh0..mh{k-1}) frame — usually one signature_sets() pass
-        # over a superset corpus, filtered per LSH pass — so this call does
-        # no shingling/collapsing of its own. Collapse/label semantics are
-        # the caller's job: pass ``members`` for member fan-out and
-        # ``bipartite_col`` (a label column already ON sig_source) for the
-        # cross-label contract.
         if collapse_exact:
             raise ValueError(
                 "sig_source requires collapse_exact=False: the caller owns "
@@ -995,63 +904,9 @@ def minhash_lsh_pairs(
                 "sig_source requires bipartite=None: put the label on the "
                 "signed frame and name it via bipartite_col"
             )
-    elif bipartite_col is not None or members is not None:
-        raise ValueError("bipartite_col/members are only valid with sig_source")
-    if bipartite_col is not None and candidate_scope == "star":
-        raise ValueError(
-            "candidate_scope='star' and bipartite_col are mutually exclusive: "
-            "star edges all touch the bucket min regardless of label"
-        )
-    if bipartite is not None and collapse_exact and not content_keyed:
-        # The label is evaluated once per distinct-text rep and inherited
-        # by every member, which is correct ONLY for content-determined
-        # labels (a pure function of text_col, e.g. text.hash_split). A
-        # row-identity label (source column, doc id parity, ...) would
-        # silently mislabel collapsed members and drop identity pairs —
-        # require the caller to attest content-determinism explicitly
-        # rather than documenting the trap (ADVICE r07).
-        raise ValueError(
-            "bipartite with collapse_exact=True requires content_keyed=True: "
-            "the label must be a pure function of the text column (e.g. "
-            "text.hash_split) so exact-duplicate members inherit their "
-            "rep's label correctly; pass collapse_exact=False for "
-            "row-identity labels"
-        )
-
-    if sig_source is None:
-        # Size the shuffle floor from the source scan BEFORE the first
-        # wide stage — the exact-collapse groupBy and the eager member
-        # count below are corpus-scale shuffles too (ADVICE r12: the old
-        # placement below the collapse left them at the session default
-        # at octave scale; canonical_keep_list/decontaminate_canonical_lsh
-        # already floored before collapse, this entry did not).
-        scale_partition_floor(df)
-    if collapse_exact:
-        df, members = _exact_text_collapse(df, text_col, id_col)
-    # (id, label) projection for bipartite filtering. Taken AFTER collapse,
-    # which is sound only for content-determined labels (e.g.
-    # text.hash_split): identical texts share a label, so the rep's label
-    # is every member's label. One row per doc, joined onto the one-row-
-    # per-doc src frame pre-explode so the banded rows carry it for free.
-    lbl = (
-        df.select(F.col(id_col).alias("id"), bipartite.alias("_lbl"))
-        if bipartite is not None
-        else None
-    )
-
-    rows = num_hashes // bands
-    # One pass builds BOTH the verification hash set and the signature;
-    # it feeds band generation and both verification sides, the banded
-    # frame feeds bucket sizing and both self-join sides. Persist both —
-    # each is compact (one row per doc / 16 narrow rows per doc), a
-    # sliver of corpus size at any scale. In shared mode the caller owns
-    # sig_source's persistence (it is typically a filter over one
-    # persisted signed frame feeding several passes).
-    if sig_source is not None:
-        # Fail fast on a mis-built shared frame (ADVICE r08): a sig_source
-        # carrying MORE mh columns than num_hashes would silently band
-        # over a subset (changed recall, no error), and a missing `sh`
-        # column only surfaces deep in the verification join.
+        # Fail fast on a mis-built shared frame (ADVICE r08): extra mh
+        # columns would silently band over a subset (changed recall), and
+        # a missing `sh` only surfaces deep in the verification join.
         cols = set(sig_source.columns)
         missing = {"id", "sh", *(f"mh{j}" for j in range(num_hashes))} - cols
         if missing:
@@ -1065,712 +920,60 @@ def minhash_lsh_pairs(
                 f"with more hashes than num_hashes={num_hashes}; banding "
                 "over a subset would silently change recall"
             )
-        src = sig_source
-    else:
-        src = signature_sets(df, text_col, id_col, n, num_hashes).persist(
-            StorageLevel.MEMORY_AND_DISK
+    elif bipartite_col is not None or members is not None:
+        raise ValueError("bipartite_col/members are only valid with sig_source")
+    if bipartite_col is not None and candidate_scope == "star":
+        raise ValueError(
+            "candidate_scope='star' and bipartite_col are mutually exclusive: "
+            "star edges all touch the bucket min regardless of label"
         )
-        # (src is materialized transitively by banded's eager count below
-        # — banded derives from src, so one job measures both caches)
+    if bipartite is not None and collapse_exact and not content_keyed:
+        # A row-identity label (source column, doc id parity, ...) would
+        # silently mislabel collapsed members and drop identity pairs —
+        # the caller attests content-determinism explicitly (ADVICE r07).
+        raise ValueError(
+            "bipartite with collapse_exact=True requires content_keyed=True: "
+            "the label must be a pure function of the text column (e.g. "
+            "text.hash_split) so exact-duplicate members inherit their "
+            "rep's label correctly; pass collapse_exact=False for "
+            "row-identity labels"
+        )
 
-    band_structs = [
-        F.struct(
-            F.lit(bid).alias("band"),
-            F.xxhash64(*[F.col(f"mh{bid * rows + r}") for r in range(rows)]).alias(
-                "bkey"
-            ),
-        )
-        for bid in range(bands)
-    ]
-    if lbl is not None:
-        band_src, band_cols = src.join(lbl, "id"), ["_lbl"]
-    elif bipartite_col is not None:
-        # label already rides the signed frame — no join, no extra scan
-        band_src = (
-            src
-            if bipartite_col == "_lbl"
-            else src.withColumnRenamed(bipartite_col, "_lbl")
-        )
-        band_cols = ["_lbl"]
-    else:
-        band_src, band_cols = src, []
-    banded = (
-        band_src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
-        .select(
-            "id",
-            *band_cols,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bkey").alias("bkey"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    if sig_source is None:
+        # Size the shuffle floor from the source scan BEFORE the first
+        # wide stage — the exact-collapse groupBy and its eager member
+        # count are corpus-scale shuffles too (ADVICE r12).
+        scale_partition_floor(df)
+    if collapse_exact:
+        df, members = _exact_text_collapse(df, text_col, id_col)
+    src, band_src, band_cols = _lsh_signatures(
+        df, text_col, id_col, n, num_hashes, bipartite, sig_source, bipartite_col
     )
-    # Eager count: the bucket self-join and the verify joins below put
-    # cached projections on join sides; MATERIALIZED InMemoryRelations
-    # report MEASURED sizes, so static broadcast decisions over them are
-    # size-sound at every SF instead of riding a Generate-collapsed
-    # estimate (the r09 BroadcastOverGenerate class). One job
-    # materializes banded AND src (its parent cache) — and since that job
-    # has to scan every banded row anyway, it doubles as the ALWAYS-ON
-    # cap audit (VERDICT r10 #3), now a bucket-size HISTOGRAM (r12): one
-    # row per DISTINCT bucket size reaches the driver (bounded — a corpus
-    # has far fewer distinct bucket sizes than buckets), which is enough
-    # to (a) resolve max_bucket="auto" BEFORE enumeration, (b) compute
-    # exactly what any cap discards, so a production caller (stats=None —
-    # every boarded query and canonical pipeline) gets a WARN the moment
-    # a cap bites instead of silent recall loss, and (c) bound the array
-    # indices for the packed once-per-pair reduction below.
-    # Per-bucket emission work, CONTRACT-exact (r12): star emits c-1 edges,
-    # all-pairs C(c,2), and the bipartite block-split only CROSS-label
-    # pairs — C(c,2) minus the per-label within sums. Counting same-label
-    # pairs that never leave the candidate join would both mis-budget
-    # "auto" and overfire the flood guard (r11 ran the 900x bipartite
-    # decon fine under the default env; its C(c,2) overcount would not
-    # have). Work is carried DOUBLED (c*(c-1) is always even) so the
-    # histogram stays integer; halved driver-side.
-    if candidate_scope == "star":
-        _per_bucket = banded.groupBy("band", "bkey").agg(
-            F.count(F.lit(1)).alias("count"),
-            (2 * (F.count(F.lit(1)) - 1)).alias("w2"),
-        )
-    elif band_cols:
-        _c = F.sum("lc")
-        _per_bucket = (
-            banded.groupBy("band", "bkey", "_lbl")
-            .agg(F.count(F.lit(1)).alias("lc"))
-            .groupBy("band", "bkey")
-            .agg(
-                _c.alias("count"),
-                (_c * (_c - 1) - F.sum(F.col("lc") * (F.col("lc") - 1))).alias(
-                    "w2"
-                ),
-            )
-        )
-    else:
-        _c = F.count(F.lit(1))
-        _per_bucket = banded.groupBy("band", "bkey").agg(
-            _c.alias("count"), (_c * (_c - 1)).alias("w2")
-        )
-    # Fast path (VERDICT r12 #1): an EXPLICIT-int cap needs the histogram
-    # only for (a) the cap-bite WARN, (b) the flood policy's kept-emission
-    # count, (c) the packed reduction's index bound. When the worst-case
-    # kept volume — every banded row in a bucket exactly at the cap,
-    # banded_rows * (cap-1) / 2 emissions — already sits under the flood
-    # ceiling, (b) is settled conservatively and (c) is bounded by the cap
-    # itself, so the per-bucket + histogram aggregations are replaced by a
-    # plain count (the same job that materializes the src/banded caches,
-    # minus two aggregation stages and the collect). The trade, documented:
-    # in this provably-under-ceiling regime a biting cap is not WARNed —
-    # every corpus where a cap has ever measurably bitten (the 900x/2700x
-    # octaves) exceeds the worst-case bound and takes the full audit.
-    # "auto" resolution and stats= probes always take the full audit.
-    _fast = isinstance(max_bucket, int) and stats is None
-    if _fast:
-        banded_rows = banded.count()
-        _worst_kept = banded_rows * (max_bucket - 1) // 2
-        _fast = _worst_kept <= _AUDIT_SKIP_MAX_WORST
-    if _fast:
-        eff_cap = max_bucket
-        kept_work = _worst_kept  # upper bound, <= the flood ceiling
-        max_kept = max_bucket  # upper bound; packed guard needs < 2^27
-        total_work = _worst_kept
-        dropped_buckets = 0  # unknown on this path (no WARN possible)
-        dropped_emissions = 0
-    else:
-        _hist = (
-            _per_bucket.groupBy("count")
-            .agg(F.count(F.lit(1)).alias("nb"), F.sum("w2").alias("w2"))
-            .collect()
-        )
-        _sizes = sorted(
-            (int(r["count"]), int(r["nb"]), int(r["w2"])) for r in _hist
-        )
-        banded_rows = sum(c * nb for c, nb, _ in _sizes)
-        total_work = sum(w2 for _, _, w2 in _sizes) // 2
-    if _fast:
-        pass
-    elif max_bucket == "auto":
-        # Scale-free budget: allow up to auto_work_per_row candidate
-        # emissions per banded row. Linear-in-corpus work (duplicate
-        # families included — their members grow the denominator) stays
-        # UNCAPPED, so the r11 2700x failure mode (fixed cap < family
-        # size discards half the true merges) cannot happen under
-        # defaults; only in-bucket quadratic growth past the budget —
-        # boilerplate floods of mutually-DISSIMILAR docs — engages the
-        # guard, at the largest cap whose kept volume fits the budget.
-        _budget = (auto_work_per_row or _AUTO_WORK_PER_ROW) * banded_rows
-        if total_work <= _budget:
-            eff_cap = None
-        else:
-            acc, eff_cap = 0, _sizes[0][0] if _sizes else 2
-            for c, _nb, w2 in _sizes:
-                acc += w2 // 2
-                if acc > _budget:
-                    break
-                eff_cap = c
-            _LOG.warning(
-                "minhash_lsh_pairs: max_bucket='auto' engaged the skew "
-                "guard at cap=%d — uncapped candidate volume %d emissions "
-                "(%.1f per banded row) exceeds the budget of %.0f per "
-                "banded row x %d rows. If this corpus's large buckets are "
-                "TRUE duplicate families (not boilerplate collisions), "
-                "pass max_bucket=None to keep them — grouped verification "
-                "keeps uncapped floods executable (BENCH_SCALE.md r11)",
-                eff_cap,
-                total_work,
-                total_work / max(banded_rows, 1),
-                auto_work_per_row or _AUTO_WORK_PER_ROW,
-                banded_rows,
-            )
-    else:
-        eff_cap = max_bucket  # int (hard cap) or None (uncapped)
-    if not _fast:
-        kept_work = (
-            sum(w2 for c, _, w2 in _sizes if eff_cap is None or c <= eff_cap)
-            // 2
-        )
-        max_kept = max(
-            (c for c, _, _ in _sizes if eff_cap is None or c <= eff_cap),
-            default=0,
-        )
-        dropped_buckets = (
-            0
-            if eff_cap is None
-            else sum(nb for c, nb, _ in _sizes if c > eff_cap)
-        )
-        dropped_emissions = total_work - kept_work
-    if dropped_buckets > 0 and not isinstance(max_bucket, str):
-        _LOG.warning(
-            "minhash_lsh_pairs: max_bucket=%d dropped %d flooded bucket(s) "
-            "= %d candidate emissions before verification. The output cost "
-            "grows with duplicate multiplicity: measured 0%% of merges at "
-            "300x, 0.5%% at 900x, but 50%% at 2700x — where true dup "
-            "families outgrew the cap and the dropped buckets WERE the dup "
-            "families (BENCH_SCALE.md cap-recall). Size max_bucket above "
-            "the expected duplicate family size, or pass max_bucket=None / "
-            "'auto' (grouped verification keeps the flood executable) if "
-            "this corpus needs those pairs",
-            eff_cap,
-            dropped_buckets,
-            dropped_emissions,
-        )
-
-    # Skew guard: drop degenerate buckets (e.g. identical boilerplate
-    # signatures) that would go quadratic; at 100 TB this is the
-    # difference between a bounded self-join and a runaway stage.
-    # Sizing via a count window, not groupBy+join-back: the window's one
-    # (band, bkey) exchange is exactly the partitioning the self-join
-    # needs, so the filter is map-side relative to it — the agg+join
-    # formulation re-scanned the banded frame twice and added a join
-    # (measured 3x slower end-to-end at sf0.1).
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy("band", "bkey")
-    if candidate_scope == "star":
-        # Star edges: (bucket-min, member), n-1 per bucket, candidate
-        # volume LINEAR in banded rows. The min rides the SAME window
-        # exchange the size filter already pays — no self-join stage at
-        # all. bmin < id always holds, so (id_a, id_b) ordering is free.
-        sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb)).withColumn(
-            "bmin", F.min("id").over(wb)
-        )
-        if eff_cap is not None:
-            sized = sized.filter(F.col("bsz") <= eff_cap)
-        banded_ok = sized.select("id", "band", "bkey")
-        cand = (
-            sized.filter(F.col("id") != F.col("bmin"))
-            .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
-            .distinct()
-        )
-    else:
-        sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
-        if eff_cap is not None:
-            sized = sized.filter(F.col("bsz") <= eff_cap)
-        banded_ok = sized.select("id", *band_cols, "band", "bkey")
-        x, y = banded_ok.alias("x"), banded_ok.alias("y")
-        join_cond = (
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.id") < F.col("y.id"))
-        )
-        if band_cols:
-            # Cross-label-only contract: same-label pairs never leave the
-            # join, removing the within-label (e.g. train-train) share —
-            # the quadratic bulk — before distinct.
-            join_cond = join_cond & (F.col("x._lbl") != F.col("y._lbl"))
-        cand = (
-            x.join(y, join_cond)
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .distinct()
-        )
-        banded_ok = banded_ok.select("id", "band", "bkey")
-
+    banded = _lsh_banded(band_src, band_cols, num_hashes, bands)
+    audit = _lsh_cap_audit(
+        banded, band_cols, candidate_scope, max_bucket, full=stats is not None
+    )
+    sized, banded_ok, cand = _lsh_candidates(
+        banded, band_cols, candidate_scope, audit.eff_cap
+    )
     if stats is not None:
-        # Probe instrumentation (tools/dedup_probe.py): attribute the
-        # candidate stage's cost. join_work = the exact number of candidate
-        # emissions: sum C(bucket,2) for the all-pairs self-join, sum
-        # (bucket-1) for star's window-min edges, and for the bipartite
-        # block-split the exact CROSS-label pair count (C(bucket,2) minus
-        # the per-label within sums — r12; same-label pairs never leave
-        # the candidate join, so counting them overstated the bipartite
-        # bulk). The bucket-size numbers come from the always-on cap audit
-        # above (the same aggregate that materialized the caches — no
-        # extra job); only candidates_distinct costs a probe-only pass.
-        stats["bucket_join_work"] = kept_work
-        stats["max_bucket_size"] = max_kept
-        stats["dropped_buckets"] = dropped_buckets
-        stats["dropped_emissions"] = dropped_emissions
-        stats["effective_max_bucket"] = eff_cap
-        stats["banded_rows"] = banded_rows
+        # Probe instrumentation (tools/dedup_probe.py): the bucket numbers
+        # come from the audit (no extra job); only candidates_distinct
+        # costs a probe-only pass.
+        stats["bucket_join_work"] = audit.kept_work
+        stats["max_bucket_size"] = audit.max_kept
+        stats["dropped_buckets"] = audit.dropped_buckets
+        stats["dropped_emissions"] = audit.dropped_emissions
+        stats["effective_max_bucket"] = audit.eff_cap
+        stats["banded_rows"] = audit.banded_rows
         stats["candidates_distinct"] = cand.count()
-
-    if verify in ("grouped", "grouped_perband"):
-        # Per-BUCKET grouped verification (VERDICT r09 #1): ship each
-        # bucket's c signature sets ONCE, not c² pair copies. Members of
-        # buckets that can emit (2 <= bsz <= max_bucket) join their hash
-        # set by id — <= bands copies per doc, linear in corpus size —
-        # then ONE (band, bkey) aggregation materializes each bucket as a
-        # single row of id-sorted (id[, _lbl], sh) structs. Pair
-        # enumeration runs AFTER that shuffle, inside the bucket row:
-        # explode(sequence) + element_at keep the struct array a codegen
-        # variable (indexed, never copied — the r09 shingle pattern).
-        # The label-free contracts sort structs by leading field = id, so
-        # i < j gives id_a < id_b exactly like the self-join's
-        # x.id < y.id; the cross-label contract block-splits each bucket
-        # by label instead (see below) and orders ids with
-        # least/greatest.
-        #
-        # "grouped" (VERDICT r10 #1, once-per-pair): enumeration emits
-        # only NARROW (id_a, id_b, loc) rows — ids plus the bucket
-        # location (band, bkey) and array indices (i, j); the sh arrays
-        # never leave the bucket row. A groupBy(id_a, id_b) reduces each
-        # pair to its MINIMUM co-occurring band (struct min, band-first),
-        # and a join back to the bucket rows on (band, bkey) — the
-        # aggregation's own partitioning, so only the narrow pair side
-        # shuffles — runs the exact Jaccard EXACTLY ONCE per distinct
-        # pair. Tight dup families co-occur in most of the 16 bands, so
-        # this cuts up to a #co-bands-fold of intersect compute (the bulk
-        # of the r10 2700x super-linearity) for one narrow shuffle.
-        #
-        # "grouped_perband" (the r10 control): Jaccard runs inline per
-        # bucket, so a pair co-occurring in k bands is re-intersected k
-        # times before the final distinct() collapses the identical rows.
-        once = verify == "grouped"
-        # Flood fail-fast (VERDICT r11 #5): the audit's kept emission count
-        # IS the narrow candidate row count (upper bound for the bipartite
-        # block-split, exact otherwise), known at PLAN time. On a
-        # single-disk local box past _FLOOD_NARROW_ROWS the default lz4
-        # shuffle codec ENOSPCs (r11: 2700x needed zstd to complete), and
-        # spark.io.compression.codec is immutable after session start — so
-        # abort NOW naming the exact knobs instead of dying 10 minutes in.
-        # Clusters (non-local masters) only get the partition escalation:
-        # shuffle partitions ARE runtime-settable, so size them to keep
-        # each reduction task's hash table / sort run in memory and let
-        # AQE coalesce everything smaller right back (gate/bench plans are
-        # untouched — their volumes sit orders of magnitude below this).
-        _spark = banded.sparkSession
-        _action = _flood_escalation(
-            kept_work,
-            _spark.sparkContext.master,
-            _spark.conf.get("spark.io.compression.codec", "lz4"),
-            int(_spark.conf.get("spark.sql.shuffle.partitions")),
+    if verify == "grouped":
+        verified = _lsh_verify_grouped(
+            sized, src, band_src, band_cols, candidate_scope, threshold,
+            max_labels, audit,
         )
-        if _action is not None:
-            kind, payload = _action
-            if kind == "abort":
-                raise RuntimeError(payload)
-            _remember_pre_raise_partitions(
-                _spark, int(_spark.conf.get("spark.sql.shuffle.partitions"))
-            )
-            _spark.conf.set("spark.sql.shuffle.partitions", str(payload))
-            _LOG.warning(
-                "minhash_lsh_pairs: raising spark.sql.shuffle.partitions "
-                "-> %d for a ~%d-row narrow verify shuffle (sticky for "
-                "this session; AQE coalesces small partitions back)",
-                payload,
-                kept_work,
-            )
-        # Packed once-per-pair reduction (VERDICT r11 #2): min over a
-        # STRUCT compiles to SortAggregate (struct buffers aren't hash-agg
-        # mutable), which sorts the full narrow candidate stream — the
-        # dominant remaining cost at flood octaves (~1.3e9 rows at 2700x).
-        # Bit-packing (band, w, i, j) into one long and carrying bkey via
-        # min_by(bkey, packed) keeps BOTH aggregate buffers primitive, so
-        # the reduction compiles to HashAggregate with map-side partial
-        # combine — no sort, and the exchange carries ~distinct pairs per
-        # task instead of raw emissions. Value-identical to the struct
-        # min: within one (band, w) a pair occupies exactly one bucket and
-        # one (i, j), so bkey never tiebreaks and min(packed) selects the
-        # same row lexicographic struct-min did (pinned by
-        # test_grouped_verify_matches_pairs across all three shapes).
-        # Guards: band needs bits 55..62 (bands <= 256) and i/j bits fit
-        # 27 each (max kept bucket < 2^27, known from the audit
-        # histogram); outside that envelope fall back to the struct shape.
-        use_packed = (
-            once
-            and once_reduction == "packed"
-            and bands <= 256
-            and max_kept < (1 << 27)
-        )
-        _IJ_MASK = (1 << 27) - 1
-
-        def _pack_loc(w: int):
-            return (
-                F.shiftleft(F.col("band").cast("long"), 55)
-                .bitwiseOR(F.lit(w << 54).cast("long"))
-                .bitwiseOR(F.shiftleft(F.col("i").cast("long"), 27))
-                .bitwiseOR(F.col("j").cast("long"))
-            )
-
-        def _reduce_packed(narrow):
-            return (
-                narrow.groupBy("id_a", "id_b")
-                .agg(F.min("p").alias("p"), F.min_by("bkey", "p").alias("bkey"))
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.shiftright("p", 55).cast("int").alias("band"),
-                    F.shiftright("p", 54)
-                    .bitwiseAND(F.lit(1).cast("long"))
-                    .cast("int")
-                    .alias("w"),
-                    F.shiftright("p", 27)
-                    .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
-                    .cast("int")
-                    .alias("i"),
-                    F.col("p")
-                    .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
-                    .cast("int")
-                    .alias("j"),
-                    "bkey",
-                )
-            )
-
-        def _jac_sh(sh_a, sh_b):
-            n_inter = F.size(F.array_intersect(sh_a, sh_b))
-            return n_inter / (F.size(sh_a) + F.size(sh_b) - n_inter)
-
-        def _jac(a, b):
-            return _jac_sh(a.getField("sh"), b.getField("sh"))
-
-        pool = sized.filter(F.col("bsz") >= 2)
-        if band_cols:
-            # Cross-label contract, BLOCK-SPLIT formulation. Two taxes the
-            # naive enumerate-all-pairs-and-guard shape pays and pairs-mode
-            # never did (its join condition skips same-label pairs inside
-            # the join): (1) label-PURE buckets — the undeduped side's
-            # variant floods at the straddle octaves — ship their full
-            # signature sets for zero possible output; (2) MIXED buckets
-            # enumerate their same-label bulk (e.g. eval-eval pairs inside
-            # a family bucket) only to null-guard it. Both die here:
-            # the bucket's distinct-label count and MIN label ride the
-            # SAME (band, bkey) window exchange the size filter pays,
-            # pure buckets are pruned before the grouped shuffle, and the
-            # aggregation splits each bucket into the min-label block
-            # ``da`` vs the rest ``db`` (collect_list skips the
-            # when-nulls), so enumeration is the pure cross product
-            # da x db — every pair cross-label by construction, no guard.
-            # Buckets with >2 distinct labels (impossible under a
-            # max_labels=2 attestation; possible for arbitrary label
-            # columns) additionally enumerate within the rest block under
-            # the label guard — see the max_labels branch below.
-            pool = (
-                pool.withColumn("_nl", F.size(F.collect_set("_lbl").over(wb)))
-                .withColumn("_lbl0", F.min("_lbl").over(wb))
-                .filter(F.col("_nl") >= 2)
-                .select("id", "band", "bkey", "_nl", "_lbl0")
-            )
-            # _lbl rides src (sig_source mode) or joins on via lbl — in
-            # both cases band_src carries it alongside sh
-            sh_map = band_src.select("id", "_lbl", "sh")
-            # array_sort is LOAD-BEARING, not cosmetic: collect_list's
-            # element order over a shuffle is nondeterministic across
-            # (re-)executions, and the once-per-pair shape evaluates this
-            # aggregation TWICE — once for enumeration (which captures
-            # array indices) and once on the verify join's bucket side
-            # (which resolves them). Unsorted blocks let the two
-            # evaluations disagree under contended shuffle fetches, so
-            # element_at(da/db, i) dereferenced the WRONG doc's signature
-            # set (caught at the 2700x octave: 440,089 vs 431,985
-            # contaminated evals). Sorting by the unique leading id makes
-            # both evaluations bit-identical. The label-free branch below
-            # was always sorted (its star contract needs the min at
-            # ds[1]).
-            grouped = (
-                pool.join(sh_map, "id")
-                .groupBy("band", "bkey")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_lbl") == F.col("_lbl0"),
-                                F.struct(F.col("id"), F.col("sh")),
-                            )
-                        )
-                    ).alias("da"),
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_lbl") != F.col("_lbl0"),
-                                F.struct(
-                                    F.col("id"), F.col("_lbl"), F.col("sh")
-                                ),
-                            )
-                        )
-                    ).alias("db"),
-                    # INVARIANT (ADVICE r11): every aggregate in this agg
-                    # must be DETERMINISTIC under shuffle re-execution —
-                    # the once shape evaluates `grouped` TWICE (index
-                    # capture + index resolution on the verify join's
-                    # bucket side), so any order-dependent column here
-                    # silently re-introduces the wrong-signature
-                    # dereference that array_sort above fixes. first(_nl)
-                    # is safe ONLY because _nl is bucket-CONSTANT (a
-                    # window over the same (band, bkey) key); do not add
-                    # first/any_value over non-constant columns.
-                    F.first("_nl").alias("nl"),
-                )
-            )
-
-            def _ids(a, b):
-                # pairs-mode orders ids via x.id < y.id in the self-join;
-                # block membership doesn't follow id order, so order here
-                return (
-                    F.least(a.getField("id"), b.getField("id")).alias("id_a"),
-                    F.greatest(a.getField("id"), b.getField("id")).alias(
-                        "id_b"
-                    ),
-                )
-
-            # Attested-binary label (the train/eval contracts): every
-            # cross-label pair touches the min label, so the min x rest
-            # cross product is COMPLETE and the within-rest branch never
-            # builds. (An earlier shape re-aggregated that branch's own
-            # subset instead — for binary labels its probe side is empty,
-            # but the join still exchanged the full signed frame:
-            # 78 -> 157s at the 300x octave. Plan-time skip is the only
-            # formulation that pays literally nothing.) Unattested
-            # labels: >2-label buckets additionally enumerate within the
-            # rest block under the label guard, per-row gated by nl so
-            # 2-label buckets emit NOTHING (explode of an empty array).
-            # Rides the SAME aggregation — ReuseExchange shares the
-            # shuffle; the second final-agg scan is the price of not
-            # attesting.
-            binary = max_labels is not None and max_labels <= 2
-            exc = grouped.select(
-                "da", "db", "band", "bkey",
-                F.explode(F.sequence(F.lit(1), F.size("da"))).alias("i"),
-            ).select(
-                "da", "db", "band", "bkey", "i",
-                F.explode(F.sequence(F.lit(1), F.size("db"))).alias("j"),
-            )
-            a_c = F.element_at("da", F.col("i"))
-            b_c = F.element_at("db", F.col("j"))
-            if not binary:
-                exd = grouped.select(
-                    "db", "band", "bkey",
-                    F.explode(
-                        F.when(
-                            F.col("nl") > 2,
-                            F.sequence(F.lit(1), F.size("db") - 1),
-                        ).otherwise(F.array().cast("array<int>"))
-                    ).alias("i"),
-                ).select(
-                    "db", "band", "bkey", "i",
-                    F.explode(F.sequence(F.col("i") + 1, F.size("db"))).alias(
-                        "j"
-                    ),
-                )
-                a_d = F.element_at("db", F.col("i"))
-                b_d = F.element_at("db", F.col("j"))
-            if once:
-                # Narrow candidates: the sh arrays stay in the bucket row.
-                # loc fields are band-first so min(loc) picks each pair's
-                # minimum co-occurring band; w disambiguates which block
-                # the indices address (0: i in da, j in db; 1: both in
-                # db) — within one band a pair occupies exactly one
-                # bucket and one branch, so loc is unique per band.
-                if use_packed:
-                    nc = exc.select(
-                        *_ids(a_c, b_c), _pack_loc(0).alias("p"), "bkey"
-                    )
-                else:
-                    nc = exc.select(
-                        *_ids(a_c, b_c),
-                        F.struct(
-                            "band", F.lit(0).alias("w"), "bkey", "i", "j"
-                        ).alias("loc"),
-                    )
-                if binary:
-                    narrow = nc
-                else:
-                    ndf = exd.filter(
-                        a_d.getField("_lbl") != b_d.getField("_lbl")
-                    )
-                    if use_packed:
-                        nd = ndf.select(
-                            *_ids(a_d, b_d), _pack_loc(1).alias("p"), "bkey"
-                        )
-                    else:
-                        nd = ndf.select(
-                            *_ids(a_d, b_d),
-                            F.struct(
-                                "band", F.lit(1).alias("w"), "bkey", "i", "j"
-                            ).alias("loc"),
-                        )
-                    narrow = nc.unionByName(nd)
-                if use_packed:
-                    best = _reduce_packed(narrow)
-                else:
-                    best = (
-                        narrow.groupBy("id_a", "id_b")
-                        .agg(F.min("loc").alias("loc"))
-                        .select(
-                            "id_a",
-                            "id_b",
-                            F.col("loc.band").alias("band"),
-                            F.col("loc.w").alias("w"),
-                            F.col("loc.bkey").alias("bkey"),
-                            F.col("loc.i").alias("i"),
-                            F.col("loc.j").alias("j"),
-                        )
-                    )
-                # (band, bkey) is the aggregation's own output
-                # partitioning — only the narrow pair side exchanges. NO
-                # static join hint: a forced shuffle_hash build of the
-                # narrow pair side OOM'd a 32g heap at the 2700x octave
-                # (~560 MB of hash map per task x 32 concurrent tasks —
-                # SHJ builds cannot spill). Unhinted, the planner's
-                # sort-merge is spillable at any scale, and AQE's
-                # maxShuffledHashJoinLocalMapThreshold (set in
-                # session.get_spark) converts back to the fast hash join
-                # exactly when the MEASURED per-partition build fits.
-                joined = best.join(grouped, ["band", "bkey"])
-                sh_b = F.element_at("db", F.col("j")).getField("sh")
-                if binary:
-                    sh_a = F.element_at("da", F.col("i")).getField("sh")
-                else:
-                    sh_a = F.when(
-                        F.col("w") == 0,
-                        F.element_at("da", F.col("i")).getField("sh"),
-                    ).otherwise(F.element_at("db", F.col("i")).getField("sh"))
-                verified = joined.select(
-                    "id_a", "id_b", _jac_sh(sh_a, sh_b).alias("jaccard")
-                ).filter(F.col("jaccard") >= threshold)
-            else:
-
-                def _emit(ex, a, b, jac):
-                    return ex.select(
-                        *_ids(a, b), jac.alias("jaccard")
-                    ).filter(F.col("jaccard") >= threshold)
-
-                v_cross = _emit(exc, a_c, b_c, _jac(a_c, b_c))
-                if binary:
-                    verified = v_cross.distinct()
-                else:
-                    v_db = _emit(
-                        exd, a_d, b_d,
-                        F.when(
-                            a_d.getField("_lbl") != b_d.getField("_lbl"),
-                            _jac(a_d, b_d),
-                        ),
-                    )
-                    verified = v_cross.unionByName(v_db).distinct()
-        else:
-            pool = pool.select("id", "band", "bkey")
-            sh_map = src.select("id", "sh")
-            grouped = (
-                pool.join(sh_map, "id")
-                .groupBy("band", "bkey")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("id"), F.col("sh")))
-                    ).alias("ds")
-                )
-            )
-            csz = F.size("ds")
-            if candidate_scope == "star":
-                # docs[1] is the bucket min (id-sorted structs); edges
-                # (docs[1], docs[j]) for j in 2..c — same star contract.
-                ex = grouped.select(
-                    "ds", "band", "bkey", F.lit(1).alias("i"),
-                    F.explode(F.sequence(F.lit(2), csz)).alias("j"),
-                )
-            else:
-                ex = grouped.select(
-                    "ds", "band", "bkey",
-                    F.explode(F.sequence(F.lit(1), csz - 1)).alias("i"),
-                ).select(
-                    "ds", "band", "bkey", "i",
-                    F.explode(F.sequence(F.col("i") + 1, F.size("ds"))).alias(
-                        "j"
-                    ),
-                )
-            a = F.element_at("ds", F.col("i"))
-            b = F.element_at("ds", F.col("j"))
-            if once:
-                # Narrow candidates (ids + location; ds stays put), min
-                # co-occurring band per pair, verify once in that bucket.
-                if use_packed:
-                    narrow = ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        _pack_loc(0).alias("p"),
-                        "bkey",
-                    )
-                    best = _reduce_packed(narrow).drop("w")
-                else:
-                    narrow = ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        F.struct("band", "bkey", "i", "j").alias("loc"),
-                    )
-                    best = (
-                        narrow.groupBy("id_a", "id_b")
-                        .agg(F.min("loc").alias("loc"))
-                        .select(
-                            "id_a",
-                            "id_b",
-                            F.col("loc.band").alias("band"),
-                            F.col("loc.bkey").alias("bkey"),
-                            F.col("loc.i").alias("i"),
-                            F.col("loc.j").alias("j"),
-                        )
-                    )
-                # unhinted for the same 32g-OOM reason as the
-                # cross-label branch above (AQE re-converts when safe)
-                joined = best.join(grouped, ["band", "bkey"])
-                verified = joined.select(
-                    "id_a", "id_b", _jac(a, b).alias("jaccard")
-                ).filter(F.col("jaccard") >= threshold)
-            else:
-                verified = (
-                    ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        _jac(a, b).alias("jaccard"),
-                    )
-                    .filter(F.col("jaccard") >= threshold)
-                    .distinct()
-                )
     else:
-        # Exact verification on candidates only: each pair re-joins the two
-        # hash SETS and intersects them worker-side — no inverted index, no
-        # per-shingle rows.
-        pa = src.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        pb = src.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        verified = (
-            cand.join(pa, "id_a")
-            .join(pb, "id_b")
-            .withColumn("n_inter", n_inter)
-            .withColumn(
-                "jaccard",
-                F.col("n_inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        verified = _lsh_verify_pairs(cand, src, threshold)
     # Construction done: any async collapse count launched above has had
     # the audit/count job to overlap with — block here so the caller's
     # first action plans against fully-measured caches.
@@ -1785,8 +988,588 @@ def minhash_lsh_pairs(
         banded_ok.select("id").distinct(),
         "jaccard",
         F.lit(1.0),
-        include_within=bipartite is None and bipartite_col is None,
+        include_within=not band_cols,
     )
+
+
+def _lsh_signatures(
+    df: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    n: int,
+    num_hashes: int,
+    bipartite,
+    sig_source: DataFrame | None,
+    bipartite_col: str | None,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """LSH stage 1 — inputs and signatures. Returns ``(src, band_src,
+    band_cols)``: ``src`` is the one-row-per-doc ``(id, sh, mh0..)`` frame
+    (``sig_source``, or built here and persisted — it feeds banding and
+    both verification sides); ``band_src`` is ``src`` carrying the
+    bipartite label as ``_lbl``; ``band_cols`` is ``["_lbl"]`` when there
+    is a label, else ``[]``."""
+    from pyspark import StorageLevel
+
+    # (id, label) projection for bipartite filtering, taken AFTER collapse —
+    # sound only for content-determined labels (identical texts share a
+    # label, so the rep's label is every member's). Joined onto the
+    # one-row-per-doc src pre-explode so banded rows carry it for free.
+    lbl = (
+        df.select(F.col(id_col).alias("id"), bipartite.alias("_lbl"))
+        if bipartite is not None
+        else None
+    )
+    if sig_source is not None:
+        # the caller owns sig_source's persistence (typically a filter over
+        # one persisted signed frame feeding several passes)
+        src = sig_source
+    else:
+        # (materialized transitively by the audit job: banded derives from
+        # src, so one job measures both caches)
+        src = signature_sets(df, text_col, id_col, n, num_hashes).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+    if lbl is not None:
+        return src, src.join(lbl, "id"), ["_lbl"]
+    if bipartite_col is not None:
+        # label already rides the signed frame — no join, no extra scan
+        band_src = (
+            src
+            if bipartite_col == "_lbl"
+            else src.withColumnRenamed(bipartite_col, "_lbl")
+        )
+        return src, band_src, ["_lbl"]
+    return src, src, []
+
+
+def _lsh_banded(
+    band_src: DataFrame, band_cols: list[str], num_hashes: int, bands: int
+) -> DataFrame:
+    """LSH stage 2 — banding: one ``(id[, _lbl], band, bkey)`` row per doc
+    per band, ``bkey`` = xxhash64 of the band's ``num_hashes // bands``
+    mins. Persisted: it feeds the audit, bucket sizing, and both
+    self-join sides — a narrow sliver of corpus size at any scale."""
+    from pyspark import StorageLevel
+
+    rows = num_hashes // bands
+    band_structs = [
+        F.struct(
+            F.lit(bid).alias("band"),
+            F.xxhash64(*[F.col(f"mh{bid * rows + r}") for r in range(rows)]).alias(
+                "bkey"
+            ),
+        )
+        for bid in range(bands)
+    ]
+    return (
+        band_src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
+        .select(
+            "id",
+            *band_cols,
+            F.col("bb.band").alias("band"),
+            F.col("bb.bkey").alias("bkey"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+class _CapAudit(NamedTuple):
+    """LSH stage 3's record: the cap in force and what it keeps/drops."""
+
+    eff_cap: int | None  # applied bucket cap; None = uncapped
+    kept_work: int  # candidate emissions in kept buckets (narrow rows)
+    max_kept: int  # largest kept bucket (bounds the packed indices)
+    banded_rows: int
+    dropped_buckets: int
+    dropped_emissions: int
+
+
+def _bucket_size_histogram(
+    banded: DataFrame, band_cols: list[str], candidate_scope: str
+) -> list[tuple[int, int, int]]:
+    """Sorted ``(bucket size, #buckets, doubled emissions)`` rows — one per
+    DISTINCT bucket size, so the collect is bounded. Emission work is
+    contract-exact (r12): star emits c-1 edges, all-pairs C(c,2), and the
+    bipartite block-split only cross-label pairs — C(c,2) minus the
+    per-label within sums. Carried doubled (c*(c-1) is always even) so the
+    histogram stays integer."""
+    if candidate_scope == "star":
+        per_bucket = banded.groupBy("band", "bkey").agg(
+            F.count(F.lit(1)).alias("count"),
+            (2 * (F.count(F.lit(1)) - 1)).alias("w2"),
+        )
+    elif band_cols:
+        c = F.sum("lc")
+        per_bucket = (
+            banded.groupBy("band", "bkey", "_lbl")
+            .agg(F.count(F.lit(1)).alias("lc"))
+            .groupBy("band", "bkey")
+            .agg(
+                c.alias("count"),
+                (c * (c - 1) - F.sum(F.col("lc") * (F.col("lc") - 1))).alias(
+                    "w2"
+                ),
+            )
+        )
+    else:
+        c = F.count(F.lit(1))
+        per_bucket = banded.groupBy("band", "bkey").agg(
+            c.alias("count"), (c * (c - 1)).alias("w2")
+        )
+    hist = (
+        per_bucket.groupBy("count")
+        .agg(F.count(F.lit(1)).alias("nb"), F.sum("w2").alias("w2"))
+        .collect()
+    )
+    return sorted((int(r["count"]), int(r["nb"]), int(r["w2"])) for r in hist)
+
+
+def _lsh_cap_audit(
+    banded: DataFrame,
+    band_cols: list[str],
+    candidate_scope: str,
+    max_bucket: int | str | None,
+    full: bool,
+) -> _CapAudit:
+    """LSH stage 3 — cap audit and policy, run BEFORE enumeration. Its one
+    job also materializes the ``banded``/``src`` caches, so later joins
+    plan against measured sizes (the r09 BroadcastOverGenerate class).
+
+    Resolves ``max_bucket="auto"`` against the bucket-size histogram and
+    WARNs when the skew guard engages or an explicit cap drops buckets.
+    Fast path (VERDICT r12 #1): an explicit int cap without ``full``
+    replaces the histogram with a plain count when the worst-case kept
+    volume — banded_rows x (cap-1)/2 — sits under ``_AUDIT_SKIP_MAX_WORST``;
+    the flood policy is then settled conservatively and the largest kept
+    bucket is bounded by min(cap, banded_rows). A biting cap is not WARNed
+    there; every corpus where a cap has measurably bitten (900x/2700x)
+    exceeds the bound and takes the full audit."""
+    if isinstance(max_bucket, int) and not full:
+        banded_rows = banded.count()
+        worst_kept = banded_rows * (max_bucket - 1) // 2
+        if worst_kept <= _AUDIT_SKIP_MAX_WORST:
+            return _CapAudit(
+                eff_cap=max_bucket,
+                kept_work=worst_kept,  # upper bound, <= the flood ceiling
+                max_kept=min(max_bucket, banded_rows),
+                banded_rows=banded_rows,
+                dropped_buckets=0,  # unknown on this path (no WARN possible)
+                dropped_emissions=0,
+            )
+    sizes = _bucket_size_histogram(banded, band_cols, candidate_scope)
+    banded_rows = sum(c * nb for c, nb, _ in sizes)
+    total_work = sum(w2 for _, _, w2 in sizes) // 2
+    eff_cap = max_bucket  # int (hard cap) or None (uncapped)
+    if max_bucket == "auto":
+        # Scale-free budget: linear-in-corpus work (duplicate families
+        # included — their members grow the denominator) stays UNCAPPED,
+        # so a fixed cap below family size cannot discard true merges
+        # under defaults (the r11 2700x failure); only in-bucket quadratic
+        # growth past the budget engages the guard, at the largest cap
+        # whose kept volume fits.
+        budget = _AUTO_WORK_PER_ROW * banded_rows
+        if total_work <= budget:
+            eff_cap = None
+        else:
+            acc, eff_cap = 0, sizes[0][0] if sizes else 2
+            for c, _nb, w2 in sizes:
+                acc += w2 // 2
+                if acc > budget:
+                    break
+                eff_cap = c
+            _LOG.warning(
+                "minhash_lsh_pairs: max_bucket='auto' engaged the skew "
+                "guard at cap=%d — uncapped candidate volume %d emissions "
+                "(%.1f per banded row) exceeds the budget of %.0f per "
+                "banded row x %d rows. If this corpus's large buckets are "
+                "TRUE duplicate families (not boilerplate collisions), "
+                "pass max_bucket=None to keep them — grouped verification "
+                "keeps uncapped floods executable (BENCH_SCALE.md r11)",
+                eff_cap,
+                total_work,
+                total_work / max(banded_rows, 1),
+                _AUTO_WORK_PER_ROW,
+                banded_rows,
+            )
+    kept = [(c, w2) for c, _, w2 in sizes if eff_cap is None or c <= eff_cap]
+    kept_work = sum(w2 for _, w2 in kept) // 2
+    dropped_buckets = (
+        0 if eff_cap is None else sum(nb for c, nb, _ in sizes if c > eff_cap)
+    )
+    if dropped_buckets > 0 and not isinstance(max_bucket, str):
+        _LOG.warning(
+            "minhash_lsh_pairs: max_bucket=%d dropped %d flooded bucket(s) "
+            "= %d candidate emissions before verification. The output cost "
+            "grows with duplicate multiplicity: measured 0%% of merges at "
+            "300x, 0.5%% at 900x, but 50%% at 2700x — where true dup "
+            "families outgrew the cap and the dropped buckets WERE the dup "
+            "families (BENCH_SCALE.md cap-recall). Size max_bucket above "
+            "the expected duplicate family size, or pass max_bucket=None / "
+            "'auto' (grouped verification keeps the flood executable) if "
+            "this corpus needs those pairs",
+            eff_cap,
+            dropped_buckets,
+            total_work - kept_work,
+        )
+    return _CapAudit(
+        eff_cap=eff_cap,
+        kept_work=kept_work,
+        max_kept=max((c for c, _ in kept), default=0),
+        banded_rows=banded_rows,
+        dropped_buckets=dropped_buckets,
+        dropped_emissions=total_work - kept_work,
+    )
+
+
+def _lsh_candidates(
+    banded: DataFrame,
+    band_cols: list[str],
+    candidate_scope: str,
+    eff_cap: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """LSH stage 4 — candidate enumeration under the audited cap. Returns
+    ``(sized, banded_ok, cand)``: ``sized`` is ``banded`` with its bucket
+    size ``bsz`` (and, for star, the bucket min ``bmin``), capped;
+    ``banded_ok`` the surviving ``(id, band, bkey)`` rows; ``cand`` the
+    distinct ``(id_a < id_b)`` candidates — star edges, all in-bucket
+    pairs, or (with a label) cross-label pairs only.
+
+    Sizing is a count window, not groupBy + join-back: the window's one
+    (band, bkey) exchange is exactly the partitioning the self-join needs,
+    so the filter is map-side relative to it (the agg+join formulation
+    re-scanned the banded frame twice — measured 3x slower at sf0.1)."""
+    from pyspark.sql import Window
+
+    wb = Window.partitionBy("band", "bkey")
+    if candidate_scope == "star":
+        # (bucket-min, member) edges ride the SAME window exchange the size
+        # filter pays — no self-join stage; bmin < id orders the pair free.
+        sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb)).withColumn(
+            "bmin", F.min("id").over(wb)
+        )
+        if eff_cap is not None:
+            sized = sized.filter(F.col("bsz") <= eff_cap)
+        banded_ok = sized.select("id", "band", "bkey")
+        cand = (
+            sized.filter(F.col("id") != F.col("bmin"))
+            .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
+            .distinct()
+        )
+        return sized, banded_ok, cand
+    sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
+    if eff_cap is not None:
+        sized = sized.filter(F.col("bsz") <= eff_cap)
+    banded_ok = sized.select("id", *band_cols, "band", "bkey")
+    x, y = banded_ok.alias("x"), banded_ok.alias("y")
+    join_cond = (
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.bkey") == F.col("y.bkey"))
+        & (F.col("x.id") < F.col("y.id"))
+    )
+    if band_cols:
+        # Cross-label-only contract: same-label pairs never leave the
+        # join, removing the within-label (e.g. train-train) share — the
+        # quadratic bulk — before distinct.
+        join_cond = join_cond & (F.col("x._lbl") != F.col("y._lbl"))
+    cand = (
+        x.join(y, join_cond)
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .distinct()
+    )
+    return sized, banded_ok.select("id", "band", "bkey"), cand
+
+
+def _jaccard(sh_a: Column, sh_b: Column) -> Column:
+    n_inter = F.size(F.array_intersect(sh_a, sh_b))
+    return n_inter / (F.size(sh_a) + F.size(sh_b) - n_inter)
+
+
+def _lsh_verify_pairs(cand: DataFrame, src: DataFrame, threshold: float) -> DataFrame:
+    """LSH stage 5, ``verify="pairs"``: each distinct candidate re-joins
+    both hash SETS and intersects them worker-side — no inverted index, no
+    per-shingle rows."""
+    pa = src.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    pb = src.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    return (
+        cand.join(pa, "id_a")
+        .join(pb, "id_b")
+        .withColumn("n_inter", n_inter)
+        .withColumn(
+            "jaccard",
+            F.col("n_inter") / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+# Packed once-per-pair location: band in bits 55..62, block w in bit 54,
+# bucket-array indices i and j in 27 bits each.
+_IJ_BITS = 27
+_IJ_MASK = (1 << _IJ_BITS) - 1
+
+
+def _pack_loc(w: int) -> Column:
+    return (
+        F.shiftleft(F.col("band").cast("long"), 55)
+        .bitwiseOR(F.lit(w << 54).cast("long"))
+        .bitwiseOR(F.shiftleft(F.col("i").cast("long"), _IJ_BITS))
+        .bitwiseOR(F.col("j").cast("long"))
+    )
+
+
+def _reduce_packed(narrow: DataFrame) -> DataFrame:
+    """Reduce each narrow ``(id_a, id_b, p, bkey)`` candidate to its minimum
+    packed location (VERDICT r11 #2): ``min(p)`` plus ``min_by(bkey, p)``
+    keep both aggregate buffers primitive, so this compiles to
+    HashAggregate with a map-side partial combine — no sort of the narrow
+    stream. Within one (band, w) a pair occupies exactly one bucket and
+    one (i, j), so bkey never tiebreaks."""
+    return (
+        narrow.groupBy("id_a", "id_b")
+        .agg(F.min("p").alias("p"), F.min_by("bkey", "p").alias("bkey"))
+        .select(
+            "id_a",
+            "id_b",
+            F.shiftright("p", 55).cast("int").alias("band"),
+            F.shiftright("p", 54)
+            .bitwiseAND(F.lit(1).cast("long"))
+            .cast("int")
+            .alias("w"),
+            F.shiftright("p", _IJ_BITS)
+            .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
+            .cast("int")
+            .alias("i"),
+            F.col("p").bitwiseAND(F.lit(_IJ_MASK).cast("long")).cast("int").alias("j"),
+            "bkey",
+        )
+    )
+
+
+def _ordered_ids(a: Column, b: Column) -> tuple[Column, Column]:
+    return (
+        F.least(a.getField("id"), b.getField("id")).alias("id_a"),
+        F.greatest(a.getField("id"), b.getField("id")).alias("id_b"),
+    )
+
+
+def _grouped_verify_guard(spark, audit: _CapAudit) -> None:
+    """Plan-time limits of grouped verification. The packed location holds
+    bucket indices in 27 bits, so a kept bucket of 2^27+ members cannot be
+    verified grouped (it implies ~9e15 emissions — far past the flood
+    ceiling anyway). Then the flood policy (VERDICT r11 #5): the audit's
+    kept emission count IS the narrow candidate row count, known before
+    enumeration, so a single-disk local lz4 run past the ENOSPC ceiling
+    aborts now naming the knobs, and any other master gets its shuffle
+    partitions raised (runtime-settable; AQE coalesces small ones back)."""
+    if audit.max_kept > _IJ_MASK:
+        raise RuntimeError(
+            f"minhash_lsh_pairs: the cap audit kept a bucket of "
+            f"{audit.max_kept:,} members (~{audit.kept_work:,} candidate "
+            f"emissions over {audit.banded_rows:,} banded rows) — past the "
+            f"grouped verify's {_IJ_MASK + 1:,}-member index bound. Cap "
+            "the flood with max_bucket=<int>"
+        )
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    action = _flood_escalation(
+        audit.kept_work,
+        spark.sparkContext.master,
+        spark.conf.get("spark.io.compression.codec", "lz4"),
+        cur,
+    )
+    if action is None:
+        return
+    kind, payload = action
+    if kind == "abort":
+        raise RuntimeError(payload)
+    _remember_pre_raise_partitions(spark, cur)
+    spark.conf.set("spark.sql.shuffle.partitions", str(payload))
+    _LOG.warning(
+        "minhash_lsh_pairs: raising spark.sql.shuffle.partitions -> %d for "
+        "a ~%d-row narrow verify shuffle (sticky for this session; AQE "
+        "coalesces small partitions back)",
+        payload,
+        audit.kept_work,
+    )
+
+
+def _lsh_verify_grouped(
+    sized: DataFrame,
+    src: DataFrame,
+    band_src: DataFrame,
+    band_cols: list[str],
+    candidate_scope: str,
+    threshold: float,
+    max_labels: int | None,
+    audit: _CapAudit,
+) -> DataFrame:
+    """LSH stage 5, ``verify="grouped"`` (VERDICT r09 #1 / r10 #1): members
+    of buckets that can emit (2 <= bsz <= cap) join their hash set by id —
+    <= bands copies per doc, linear in corpus size — and ONE (band, bkey)
+    aggregation materializes each bucket as a row of id-sorted structs.
+    Enumeration runs inside that row (explode(sequence) + element_at keep
+    the struct array a codegen variable) and emits NARROW candidates;
+    ``_reduce_packed`` keeps each pair's minimum co-occurring band, and a
+    join back to the bucket rows on (band, bkey) — the aggregation's own
+    partitioning, so only the narrow side shuffles — runs exact Jaccard
+    once per distinct pair.
+
+    The join is unhinted on purpose: a forced shuffle_hash build of the
+    narrow pair side OOM'd a 32g heap at the 2700x octave (SHJ builds
+    cannot spill); the planner's sort-merge spills, and AQE's
+    maxShuffledHashJoinLocalMapThreshold (session.get_spark) converts back
+    to the hash join when the measured build fits."""
+    _grouped_verify_guard(sized.sparkSession, audit)
+    pool = sized.filter(F.col("bsz") >= 2)
+    if band_cols:
+        return _grouped_cross_label(pool, band_src, threshold, max_labels)
+    pool = pool.select("id", "band", "bkey")
+    sh_map = src.select("id", "sh")
+    grouped = (
+        pool.join(sh_map, "id")
+        .groupBy("band", "bkey")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("id"), F.col("sh")))
+            ).alias("ds")
+        )
+    )
+    csz = F.size("ds")
+    if candidate_scope == "star":
+        # ds[1] is the bucket min (id-sorted structs); edges (ds[1], ds[j])
+        # for j in 2..c — the same star contract
+        ex = grouped.select(
+            "ds", "band", "bkey", F.lit(1).alias("i"),
+            F.explode(F.sequence(F.lit(2), csz)).alias("j"),
+        )
+    else:
+        # id-sorted structs: i < j gives id_a < id_b, like x.id < y.id
+        ex = grouped.select(
+            "ds", "band", "bkey",
+            F.explode(F.sequence(F.lit(1), csz - 1)).alias("i"),
+        ).select(
+            "ds", "band", "bkey", "i",
+            F.explode(F.sequence(F.col("i") + 1, F.size("ds"))).alias("j"),
+        )
+    a = F.element_at("ds", F.col("i"))
+    b = F.element_at("ds", F.col("j"))
+    narrow = ex.select(
+        a.getField("id").alias("id_a"),
+        b.getField("id").alias("id_b"),
+        _pack_loc(0).alias("p"),
+        "bkey",
+    )
+    joined = _reduce_packed(narrow).drop("w").join(grouped, ["band", "bkey"])
+    return joined.select(
+        "id_a", "id_b", _jaccard(a.getField("sh"), b.getField("sh")).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _grouped_cross_label(
+    pool: DataFrame, band_src: DataFrame, threshold: float, max_labels: int | None
+) -> DataFrame:
+    """Grouped verification for the cross-label contract, BLOCK-SPLIT: the
+    bucket's distinct-label count and MIN label ride the (band, bkey)
+    window exchange the size filter already pays, label-PURE buckets are
+    pruned before the grouped shuffle (they ship sets for zero possible
+    output), and the aggregation splits each bucket into the min-label
+    block ``da`` vs the rest ``db`` — enumeration is the cross product
+    da x db, every pair cross-label by construction. Buckets with >2
+    distinct labels additionally enumerate within ``db`` under the label
+    guard (block w=1), unless ``max_labels <= 2`` attests that cannot
+    happen, in which case that branch is never built."""
+    from pyspark.sql import Window
+
+    wb = Window.partitionBy("band", "bkey")
+    pool = (
+        pool.withColumn("_nl", F.size(F.collect_set("_lbl").over(wb)))
+        .withColumn("_lbl0", F.min("_lbl").over(wb))
+        .filter(F.col("_nl") >= 2)
+        .select("id", "band", "bkey", "_nl", "_lbl0")
+    )
+    sh_map = band_src.select("id", "_lbl", "sh")
+    # array_sort is LOAD-BEARING: collect_list order over a shuffle is
+    # nondeterministic across re-executions, and this aggregation is
+    # evaluated TWICE (index capture for enumeration, index resolution on
+    # the verify join's bucket side). Unsorted blocks let the two disagree
+    # and element_at dereferenced the WRONG doc's set (caught at 2700x:
+    # 440,089 vs 431,985 contaminated evals).
+    grouped = (
+        pool.join(sh_map, "id")
+        .groupBy("band", "bkey")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("_lbl") == F.col("_lbl0"),
+                        F.struct(F.col("id"), F.col("sh")),
+                    )
+                )
+            ).alias("da"),
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("_lbl") != F.col("_lbl0"),
+                        F.struct(F.col("id"), F.col("_lbl"), F.col("sh")),
+                    )
+                )
+            ).alias("db"),
+            # INVARIANT (ADVICE r11): every aggregate here must be
+            # deterministic under re-execution (see array_sort above);
+            # first(_nl) is safe ONLY because _nl is bucket-constant.
+            F.first("_nl").alias("nl"),
+        )
+    )
+    binary = max_labels is not None and max_labels <= 2
+    exc = grouped.select(
+        "da", "db", "band", "bkey",
+        F.explode(F.sequence(F.lit(1), F.size("da"))).alias("i"),
+    ).select(
+        "da", "db", "band", "bkey", "i",
+        F.explode(F.sequence(F.lit(1), F.size("db"))).alias("j"),
+    )
+    # block membership doesn't follow id order, so order ids explicitly
+    narrow = exc.select(
+        *_ordered_ids(F.element_at("da", F.col("i")), F.element_at("db", F.col("j"))),
+        _pack_loc(0).alias("p"),
+        "bkey",
+    )
+    if not binary:
+        # Unattested labels: >2-label buckets also enumerate within db,
+        # gated per row by nl so 2-label buckets emit nothing. Rides the
+        # same aggregation (ReuseExchange shares the shuffle).
+        exd = grouped.select(
+            "db", "band", "bkey",
+            F.explode(
+                F.when(
+                    F.col("nl") > 2,
+                    F.sequence(F.lit(1), F.size("db") - 1),
+                ).otherwise(F.array().cast("array<int>"))
+            ).alias("i"),
+        ).select(
+            "db", "band", "bkey", "i",
+            F.explode(F.sequence(F.col("i") + 1, F.size("db"))).alias("j"),
+        )
+        a_d = F.element_at("db", F.col("i"))
+        b_d = F.element_at("db", F.col("j"))
+        narrow = narrow.unionByName(
+            exd.filter(a_d.getField("_lbl") != b_d.getField("_lbl")).select(
+                *_ordered_ids(a_d, b_d), _pack_loc(1).alias("p"), "bkey"
+            )
+        )
+    joined = _reduce_packed(narrow).join(grouped, ["band", "bkey"])
+    sh_b = F.element_at("db", F.col("j")).getField("sh")
+    if binary:
+        sh_a = F.element_at("da", F.col("i")).getField("sh")
+    else:
+        sh_a = F.when(
+            F.col("w") == 0,
+            F.element_at("da", F.col("i")).getField("sh"),
+        ).otherwise(F.element_at("db", F.col("i")).getField("sh"))
+    return joined.select(
+        "id_a", "id_b", _jaccard(sh_a, sh_b).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def _observed_changed(obs, ck: DataFrame) -> int:
@@ -1795,25 +1578,15 @@ def _observed_changed(obs, ck: DataFrame) -> int:
     localCheckpoint's materialization job, so the old per-round
     ``filter(_changed).limit(1).count()`` action disappears entirely
     (r13; one fewer scheduled job per round, verified to fire on
-    localCheckpoint in Spark 4.1). ``Observation.get`` blocks on listener
-    delivery, which is asynchronous — guard with a bounded wait and fall
-    back to the old count over the materialized leaf if the metric never
-    arrives (engine drift), so the worst case is the pre-r13 behavior,
-    never a hang. Returns nonzero iff any label changed."""
-    import queue
-
-    q: queue.Queue = queue.Queue()
-    t = threading.Thread(target=lambda: q.put(obs.get), daemon=True)
-    t.start()
-    try:
-        v = q.get(timeout=30)["chg"]
-        return int(v) if v is not None else 0  # max over zero rows -> null
-    except queue.Empty:
-        _LOG.warning(
-            "connected_components: observed convergence metric not "
-            "delivered in 30s — falling back to the limit(1) count"
-        )
+    localCheckpoint in Spark 4.1). If the metric never arrives (engine
+    drift; ``observation_or_none`` bounds the wait) the old count over the
+    materialized leaf runs instead, so the worst case is the pre-r13
+    behavior, never a hang. Returns nonzero iff any label changed."""
+    vals = observation_or_none(obs, "connected_components convergence")
+    if vals is None:
         return ck.filter("_changed").limit(1).count()
+    v = vals["chg"]
+    return int(v) if v is not None else 0  # max over zero rows -> null
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:

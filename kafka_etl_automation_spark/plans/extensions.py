@@ -2144,12 +2144,20 @@ def ext_approx_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange carries one narrow row per (type, user) and the sketch
     buffer exists only at the few-rows event_type level."""
     t = load_tables(spark, sf_dir, names=("events",))
-    per_user = t["events"].groupBy("event_type", "user_id").agg(
+    return _type_cardinality(t["events"])
+
+
+def _type_cardinality(events: DataFrame) -> DataFrame:
+    """ext_approx_cardinality's aggregation over an events frame. n_users
+    counts the non-NULL ``user_id`` of the per-(type, user) rows — exactly
+    COUNT(DISTINCT user_id), which ignores NULLs; counting rows would
+    count a NULL user as one more user."""
+    per_user = events.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).alias("c")
     )
     g = per_user.groupBy("event_type").agg(
         F.sum("c").alias("n_events"),
-        F.count(F.lit(1)).alias("n_users"),
+        F.count("user_id").alias("n_users"),
         F.approx_count_distinct("user_id", rsd=0.01).alias("n_users_approx"),
     )
     return g.select(

@@ -8,9 +8,15 @@ only the master URL and memory sizing change — the plan-shaping configs stay.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+
+# Upper bound on an Observation.get wait; see observation_or_none.
+_OBS_WAIT_SECONDS = 30
 
 
 def get_spark(
@@ -128,3 +134,39 @@ def get_spark(
     except Exception:
         pass  # py4j internals drift -> cosmetic guard only, never fatal
     return spark
+
+
+def observation_or_none(obs, what: str) -> dict | None:
+    """``Observation.get``, bounded. Metric delivery rides Spark's
+    asynchronous QueryExecutionListener, so a bare ``get`` can block for
+    good under engine drift. This waits at most ``_OBS_WAIT_SECONDS`` and
+    returns None — the caller's cue to run its fallback job — when the
+    metric does not arrive or ``get`` raises. A raising ``get`` posts its
+    exception from the worker thread, so the caller falls back at once
+    instead of waiting out the bound. ``what`` names the caller in the
+    fallback WARN."""
+    import queue
+    import threading
+
+    q: queue.Queue = queue.Queue()
+
+    def _get() -> None:
+        try:
+            q.put(obs.get)
+        except Exception as exc:
+            q.put(exc)
+
+    threading.Thread(target=_get, name="graft-observation", daemon=True).start()
+    try:
+        got = q.get(timeout=_OBS_WAIT_SECONDS)
+    except queue.Empty:
+        _LOG.warning(
+            "%s: observed metric not delivered in %ss — falling back",
+            what,
+            _OBS_WAIT_SECONDS,
+        )
+        return None
+    if isinstance(got, Exception):
+        _LOG.warning("%s: Observation.get raised — falling back", what, exc_info=got)
+        return None
+    return got

@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark.io import run_dir
+from kafka_etl_automation_spark.session import observation_or_none
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -300,9 +301,6 @@ def parse_kafka_records(raw: DataFrame, value_schema) -> DataFrame:
     ).select("v.*")
 
 
-_OBS_WAIT_SECONDS = 30
-
-
 def _is_local_path(path: str) -> bool:
     """True for plain/`file:` paths — where removing a just-written dir is
     a cheap local fs op, enabling the one-job-per-batch observed-stats
@@ -312,30 +310,24 @@ def _is_local_path(path: str) -> bool:
     return urlparse(path).scheme in ("file", "")
 
 
-def _observation_or_none(obs) -> dict | None:
-    """``Observation.get`` for a just-finished batch action, bounded:
-    metric delivery rides the (asynchronous) QueryExecutionListener, so a
-    bounded guard keeps engine drift from ever hanging the ingest loop —
-    the caller falls back to a dedicated stats job, i.e. the pre-r13
-    shape. Same pattern as dedup._observed_changed."""
-    import queue
-    import threading
+def _fs_path(path: str) -> str:
+    """Local filesystem path of a plain path or a ``file:`` URI."""
+    from urllib.parse import unquote, urlparse
 
-    q: queue.Queue = queue.Queue()
-    threading.Thread(target=lambda: q.put(obs.get), daemon=True).start()
-    try:
-        return q.get(timeout=_OBS_WAIT_SECONDS)
-    except queue.Empty:
-        return None
+    parsed = urlparse(path)
+    return unquote(parsed.path) if parsed.scheme == "file" else path
 
 
 def _remove_empty_batch_dir(batch_dir: str, stop_at: str) -> None:
     """Remove the rowless bronze dir a zero-record batch wrote (T4: an
     empty batch must leave no bronze file), pruning parents it emptied —
     up to but NOT including ``stop_at`` (bronze_base may legitimately
-    remain as an empty dir)."""
+    remain as an empty dir). ``file:`` URIs resolve to their local path
+    first — os/shutil treat the URI string as a relative path that does
+    not exist, so the dir would silently stay behind."""
     import shutil
 
+    batch_dir, stop_at = _fs_path(batch_dir), _fs_path(stop_at)
     shutil.rmtree(batch_dir, ignore_errors=True)
     cur = os.path.dirname(batch_dir)
     stop = os.path.abspath(stop_at)
@@ -425,7 +417,7 @@ def run_file_ingest(
                 .format(fmt)
                 .save(batch_dir)
             )
-            vals = _observation_or_none(obs)
+            vals = observation_or_none(obs, "run_file_ingest batch stats")
             if vals is not None:
                 n = int(vals["n"])
                 lo, hi = vals["lo"], vals["hi"]

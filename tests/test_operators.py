@@ -1540,12 +1540,11 @@ def test_grouped_verify_matches_pairs(spark):
         return sorted((r.id_a, r.id_b, round(r.jaccard, 12)) for r in d.collect())
 
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.3)
-    # all-pairs, collapse on (ext_minhash_lsh contract); r11: "grouped" is
-    # the once-per-pair min-band shape, "grouped_perband" the r10 control
+    # all-pairs, collapse on (ext_minhash_lsh contract); "grouped" is the
+    # once-per-pair min-band shape
     a_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
     a_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **kw))
     assert a_p == a_g and len(a_p) > 10
-    assert a_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **kw))
     # star, no collapse (keep-list contract)
     skw = dict(kw, collapse_exact=False, candidate_scope="star")
     assert res(dedup.minhash_lsh_pairs(df, verify="pairs", **skw)) == res(
@@ -1562,7 +1561,6 @@ def test_grouped_verify_matches_pairs(spark):
     b_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
     b_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **bkw))
     assert b_p == b_g
-    assert b_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **bkw))
     # attested-binary label (hash_split): the plan-time branch skip must
     # be value-identical to the unattested plan
     b_a = res(dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw))
@@ -1582,7 +1580,6 @@ def test_grouped_verify_matches_pairs(spark):
     t_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **tkw3))
     t_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **tkw3))
     assert t_p == t_g and len(t_p) > 0
-    assert t_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **tkw3))
     # sig_source modes (the decontaminate_canonical_lsh passes)
     reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
     sig = (
@@ -1615,6 +1612,11 @@ def test_grouped_verify_matches_pairs(spark):
     sig.unpersist()
     with pytest.raises(ValueError, match="verify"):
         dedup.minhash_lsh_pairs(df, verify="bogus", **kw)
+    # the packed once-per-pair location holds the band id in 8 bits
+    with pytest.raises(ValueError, match="bands must be <= 256"):
+        dedup.minhash_lsh_pairs(
+            df, verify="grouped", **dict(kw, num_hashes=512, bands=512)
+        )
 
 
 def test_lsh_cap_stats_are_loud(spark):
@@ -1710,7 +1712,7 @@ def test_lsh_cap_warns_in_shipping_path(spark, caplog, monkeypatch):
     )
 
 
-def test_auto_max_bucket_resolution(spark, caplog):
+def test_auto_max_bucket_resolution(spark, caplog, monkeypatch):
     """VERDICT r11 #1: max_bucket='auto' (the r12 default) must keep
     duplicate-FAMILY corpora uncapped (the fixed-1000 default discarded 50%
     of true merges at 2700x, where the capped-out buckets WERE the dup
@@ -1757,12 +1759,11 @@ def test_auto_max_bucket_resolution(spark, caplog):
     # WARNs, and drops the flooded buckets
     logger = "kafka_etl_automation_spark.operators.dedup"
     st_guard: dict = {}
+    monkeypatch.setattr(dedup, "_AUTO_WORK_PER_ROW", 0.5)
     with caplog.at_level(logging.WARNING, logger=logger):
         guard_pairs = {
             (r.id_a, r.id_b)
-            for r in dedup.minhash_lsh_pairs(
-                df, stats=st_guard, auto_work_per_row=0.5, **kw
-            ).collect()
+            for r in dedup.minhash_lsh_pairs(df, stats=st_guard, **kw).collect()
         }
     assert st_guard["effective_max_bucket"] is not None
     assert st_guard["dropped_buckets"] > 0 and st_guard["dropped_emissions"] > 0
@@ -1782,16 +1783,15 @@ def test_auto_max_bucket_resolution(spark, caplog):
         dedup.minhash_lsh_pairs(df, max_bucket=1, **kw)
 
 
-def test_once_reduction_packed_is_hash_aggregable(spark):
+def test_packed_reduction_is_hash_aggregable(spark):
     """VERDICT r11 #2: the once-per-pair reduction's min over a STRUCT
     compiled to SortAggregate — a full sort (+ spill) of the narrow
     candidate stream, the dominant remaining flood-octave cost. The packed
     formulation (bit-packed (band, w, i, j) long + min_by(bkey, packed))
     must (a) compile to HashAggregate with a map-side partial — NO
     SortAggregate anywhere in the plan — and (b) stay value-identical to
-    the struct control on the all-pairs, star-grouped, and bipartite
-    contracts (same row selected: within one (band, w) a pair occupies
-    exactly one bucket and one (i, j), so bkey never tiebreaks)."""
+    the reference ``verify="pairs"`` on the all-pairs, star-grouped, and
+    bipartite contracts."""
     from kafka_etl_automation_spark.operators import dedup, text
 
     stem = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1807,22 +1807,17 @@ def test_once_reduction_packed_is_hash_aggregable(spark):
 
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.2)
     packed = dedup.minhash_lsh_pairs(df, verify="grouped", **kw)
-    struct = dedup.minhash_lsh_pairs(
-        df, verify="grouped", once_reduction="struct", **kw
-    )
     assert "SortAggregate" not in plan(packed)
     assert "partial_min_by" in plan(packed)  # map-side combine is real
-    assert "SortAggregate" in plan(struct)  # the r11 cost, kept as control
     r_packed = res(packed)
-    assert r_packed == res(struct) and len(r_packed) > 0
+    assert r_packed == res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
+    assert len(r_packed) > 0
 
     # star under grouped verify (non-default but supported)
     skw = dict(kw, collapse_exact=False, candidate_scope="star")
     sp = dedup.minhash_lsh_pairs(df, verify="grouped", **skw)
     assert "SortAggregate" not in plan(sp)
-    assert res(sp) == res(
-        dedup.minhash_lsh_pairs(df, verify="grouped", once_reduction="struct", **skw)
-    )
+    assert res(sp) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **skw))
 
     # bipartite block-split contract (both the attested-binary and
     # unattested >=2-label plans)
@@ -1831,15 +1826,21 @@ def test_once_reduction_packed_is_hash_aggregable(spark):
     )
     bp = dedup.minhash_lsh_pairs(df, verify="grouped", **bkw)
     assert "SortAggregate" not in plan(bp)
-    assert res(bp) == res(
-        dedup.minhash_lsh_pairs(df, verify="grouped", once_reduction="struct", **bkw)
-    )
+    assert res(bp) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
     ba = dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw)
     assert "SortAggregate" not in plan(ba)
     assert res(ba) == res(bp)
 
-    with pytest.raises(ValueError, match="once_reduction"):
-        dedup.minhash_lsh_pairs(df, once_reduction="bogus", **kw)
+    # an explicit cap past the 27-bit index bound on a tiny frame stays
+    # packed: the audit fast path bounds the largest kept bucket by
+    # min(cap, banded rows), not by the cap alone
+    tiny = spark.createDataFrame(
+        [(1, f"{stem} a"), (2, f"{stem} b")], "doc_id long, text string"
+    )
+    tkw = dict(kw, bands=4, max_bucket=1 << 27)
+    tp = dedup.minhash_lsh_pairs(tiny, verify="grouped", **tkw)
+    assert "SortAggregate" not in plan(tp)
+    assert res(tp) == res(dedup.minhash_lsh_pairs(tiny, verify="pairs", **tkw))
 
 
 def test_flood_escalation_policy():
@@ -1868,6 +1869,15 @@ def test_flood_escalation_policy():
     assert kind == "raise_partitions" and n > 32
     # partitions already sized: nothing to do
     assert dedup._flood_escalation(2 * flood, "local[32]", "zstd", 4096) is None
+    # a kept bucket past the packed location's 27-bit index bound raises
+    # at plan time, quoting the audit, before the flood policy runs
+    huge = dedup._CapAudit(
+        eff_cap=None, kept_work=(1 << 27) * ((1 << 27) - 1) // 2,
+        max_kept=1 << 27, banded_rows=1 << 28,
+        dropped_buckets=0, dropped_emissions=0,
+    )
+    with pytest.raises(RuntimeError, match="134,217,728 members.*max_bucket"):
+        dedup._grouped_verify_guard(None, huge)
 
 
 def test_scale_partition_floor(spark, monkeypatch):
@@ -2079,3 +2089,34 @@ def test_grouped_bucket_blocks_are_sorted(spark):
         )
     )
     assert bp.count("array_sort(collect_list") >= 2
+
+
+def test_approx_cardinality_ignores_null_users(spark):
+    """ext_approx_cardinality's n_users must equal COUNT(DISTINCT user_id),
+    which ignores NULLs: a NULL user_id forms its own per-(type, user) row
+    in the two-level aggregate and must not count as one more user."""
+    from kafka_etl_automation_spark.plans import extensions as ext
+
+    events = spark.createDataFrame(
+        [
+            ("click", 1), ("click", 1), ("click", 2), ("click", None),
+            ("click", None), ("view", None), ("view", 3),
+            ("purchase", None),
+        ],
+        "event_type string, user_id long",
+    )
+    got = {
+        r.event_type: (r.n_events, r.n_users, r.sketch_within_5pct)
+        for r in ext._type_cardinality(events).collect()
+    }
+    want = {
+        r.event_type: (r.n_events, r.n_users, True)
+        for r in events.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+        )
+        .collect()
+    }
+    assert got == want
+    assert got["purchase"] == (1, 0, True)  # all-NULL type: zero users

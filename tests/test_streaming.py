@@ -535,19 +535,37 @@ def test_remove_empty_batch_dir_prunes_parents(tmp_root):
     os.makedirs(bronze, exist_ok=True)
     ingest._remove_empty_batch_dir(solo, bronze)
     assert os.path.exists(bronze) and os.listdir(bronze) == []
+    # file: URIs (what a file:-URI bronze_base yields) resolve to the local
+    # path — a URI string handed to shutil/os would silently remove nothing
+    uri_dir = os.path.join(bronze, "t", "p0", "run=3", "batch_id=0")
+    os.makedirs(uri_dir)
+    ingest._remove_empty_batch_dir("file://" + uri_dir, "file://" + bronze)
+    assert os.path.exists(bronze) and os.listdir(bronze) == []
 
 
 def test_observation_or_none_bounds_the_wait(monkeypatch):
     """Engine-drift guard: an observation whose metric never arrives must
-    return None (caller falls back to the dedicated stats job), not hang."""
+    return None (caller falls back to the dedicated stats job), not hang;
+    one whose ``get`` raises must return None at once, not after the
+    full bound."""
+    import time as _t
+
+    from kafka_etl_automation_spark import session
+
     class _NeverDelivers:
         @property
         def get(self):
-            import time as _t
-
             _t.sleep(3600)
 
-    monkeypatch.setattr(
-        "kafka_etl_automation_spark.streaming.ingest._OBS_WAIT_SECONDS", 1
-    )
-    assert ingest._observation_or_none(_NeverDelivers()) is None
+    class _Raises:
+        @property
+        def get(self):
+            raise RuntimeError("listener drift")
+
+    monkeypatch.setattr(session, "_OBS_WAIT_SECONDS", 1)
+    assert session.observation_or_none(_NeverDelivers(), "test") is None
+    # back to the full bound: returning under 1 s proves no wait
+    monkeypatch.setattr(session, "_OBS_WAIT_SECONDS", 30)
+    t0 = _t.monotonic()
+    assert session.observation_or_none(_Raises(), "test") is None
+    assert _t.monotonic() - t0 < 1.0
