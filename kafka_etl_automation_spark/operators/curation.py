@@ -23,15 +23,11 @@ Scale properties (the reason this is a single plan, not four jobs):
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark.operators import text
 from kafka_etl_automation_spark.operators.dedup import normalized_text
-
-_LOG = logging.getLogger(__name__)
 
 
 def score_and_filter(
@@ -387,10 +383,13 @@ def decontaminate_canonical(
     # un-persisted reference would re-run the scan + keep-list semi join
     # (measured 96.5s -> 61.7s at 300x). One original-schema row per
     # kept-or-eval doc — no bigger than the signature frames
-    # minhash_lsh_pairs already persists. Same bounded-FIFO lifecycle as
-    # dedup's collapse caches (ADVICE r05): evicted frames stay correct,
-    # they just recompute on the next action.
-    corpus = _cache_persisted(kept.unionByName(evals))
+    # minhash_lsh_pairs already persists. Eager count: corpus-sized cached
+    # frames land on join sides downstream, and a MATERIALIZED
+    # InMemoryRelation reports measured (not Generate-collapsed) stats, so
+    # static broadcast decisions over it are size-sound at every SF (the
+    # r09 BroadcastOverGenerate class).
+    corpus = dedup._persist(kept.unionByName(evals))
+    corpus.count()
     if contam_pair_source is None:
         pairs = dedup.ngram_jaccard_pairs(corpus, text_col, id_col, n, threshold)
     else:
@@ -465,14 +464,13 @@ def decontaminate_canonical_lsh(
     reps, members = dedup._exact_text_collapse(documents, text_col, id_col)
     # One signed frame for everything downstream. The label join costs one
     # narrow (id, label) scan of reps — cheap next to the shingle pass the
-    # sharing removes. Same bounded-FIFO lifecycle as the corpus caches;
-    # _cache_persisted evicts before EACH append so the live set never
-    # exceeds the cap mid-call (ADVICE r08).
+    # sharing removes. Every cache below goes through dedup's bounded
+    # registry, which evicts before EACH append (ADVICE r08).
     # reps feeds the signature build AND the label projection — persisted,
     # or the collapse group-agg re-executes per reference (the same lesson
     # the r07 ladder taught for the corpus frame)
-    reps = _cache_persisted(reps, eager=False)  # pass 1's audit covers it
-    # eager=False (VERDICT r12 #1): pass 1's always-on cap audit is the
+    reps = dedup._persist(reps)  # pass 1's audit materializes it
+    # No count (VERDICT r12 #1): pass 1's always-on cap audit is the
     # FIRST job after this frame exists and scans banded <- train_sig <-
     # sig, so it materializes sig (and reps transitively) in the same job
     # — the dedicated count here was a full extra signature pass at every
@@ -485,11 +483,10 @@ def decontaminate_canonical_lsh(
     # projection of reps, one full extra id-keyed shuffle of the signed
     # frame at any scale (guide §2.4: two operations keyed the same way
     # should share one pass).
-    sig = _cache_persisted(
+    sig = dedup._persist(
         dedup.signature_sets(
             reps, text_col, id_col, n, num_hashes, carry={"_lbl": split}
-        ),
-        eager=False,
+        )
     )
 
     # Pass 1: star-scope keep-list over the train rows of the signed frame
@@ -515,15 +512,14 @@ def decontaminate_canonical_lsh(
     # sides — without it each reference re-runs the semi join + union over
     # the cached signed frame (3x the corpus-wide semi-join shuffle at
     # scale).
-    # eager=False: pass 2's cap audit scans banded <- corpus_sig first
+    # No count: pass 2's cap audit scans banded <- corpus_sig first
     # thing, materializing this cache in the same job (sig itself is
     # already materialized by pass 1, so the semi-join + union plan here
     # is over measured stats either way).
-    corpus_sig = _cache_persisted(
+    corpus_sig = dedup._persist(
         sig.join(kept_ids, "id", "semi").unionByName(
             sig.filter(F.col("_lbl") == "eval")
-        ),
-        eager=False,
+        )
     )
     rep_pairs = dedup.minhash_lsh_pairs(
         None,
@@ -582,98 +578,6 @@ def decontaminate_canonical_lsh(
         "max_jaccard",
         "n_train_matches",
     )
-
-
-_CORPUS_CACHES: list = []
-# decontaminate_canonical caches one frame per call, the _lsh shape three
-# (reps, the signed frame, the pass-2 corpus rows); cap 6 keeps the two
-# most recent calls warm
-_CORPUS_CACHE_CAP = 6
-
-
-def _spill_level(cached_mem_bytes: int, max_heap_bytes: int):
-    """Pick the storage level for the NEXT corpus-sized cache: once the
-    already-cached bytes crowd the unified storage pool (~30% of heap at
-    the default spark.memory.fraction), further corpus caches go straight
-    to DISK_ONLY instead of competing with 32 concurrent column builders
-    for storage memory (VERDICT r10 #5: at the 2700x octave the
-    corpus-signature cache build OOM'd a 32g local driver — local mode
-    concentrates every task's builder plus the whole storage pool in one
-    JVM; on a real cluster the same cache is partitioned across
-    executors, so this guard only ever bites in local mode or on a
-    genuinely undersized executor). Pure function for testability."""
-    from pyspark import StorageLevel
-
-    if cached_mem_bytes > 0.30 * max_heap_bytes:
-        return StorageLevel.DISK_ONLY
-    return StorageLevel.MEMORY_AND_DISK
-
-
-def _cache_persisted(frame: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist ``frame`` (MEMORY_AND_DISK, or DISK_ONLY past the
-    _spill_level storage-pressure probe) into the bounded-FIFO corpus
-    cache, evicting oldest-first BEFORE appending so the live set never
-    exceeds _CORPUS_CACHE_CAP — evicting only once per call let the cache
-    transiently hold cap+2 frames while a multi-append caller ran (ADVICE
-    r08). Evicted frames stay correct; they just recompute on next action.
-    """
-    from pyspark import StorageLevel
-
-    while len(_CORPUS_CACHES) >= _CORPUS_CACHE_CAP:
-        try:
-            _CORPUS_CACHES.pop(0).unpersist(False)
-        except Exception:
-            pass
-    level = StorageLevel.MEMORY_AND_DISK
-    try:
-        sc = frame.sparkSession.sparkContext
-        # memSize + diskSize (ADVICE r11): memSize alone counts only blocks
-        # currently RESIDENT in memory, so once earlier caches spill the
-        # probe re-armed MEMORY_AND_DISK in exactly the saturated regime it
-        # targets. Disk-resident bytes overcount storage-POOL pressure, but
-        # the guard is local-mode-only and the conservative direction
-        # (going DISK_ONLY a frame early) costs a re-read, not an OOM.
-        cached = sum(
-            i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()
-        )
-        heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        level = _spill_level(cached, heap)
-        if level != StorageLevel.MEMORY_AND_DISK:
-            _LOG.warning(
-                "corpus cache: %.1f GiB already cached vs %.1f GiB heap — "
-                "persisting the next corpus frame DISK_ONLY to keep the "
-                "storage pool from evicting/OOMing mid-build",
-                cached / 2**30,
-                heap / 2**30,
-            )
-    except Exception:  # storage telemetry is best-effort, never fatal
-        pass
-    out = frame.persist(level)
-    # Eager (default): corpus-sized cached frames land on join sides
-    # downstream; a MATERIALIZED InMemoryRelation reports measured (not
-    # Generate-collapsed) stats, so static broadcast decisions over it
-    # are size-sound at every SF (the r09 BroadcastOverGenerate class).
-    # Pass eager=False when a downstream cache's count materializes this
-    # one transitively — one job, several measured caches.
-    if eager:
-        out.count()
-    _CORPUS_CACHES.append(out)
-    return out
-
-
-def _cache_release(frame: DataFrame) -> bool:
-    """Unpersist ``frame`` AND remove it from the bounded-FIFO corpus cache
-    (ADVICE r11: unpersisting a cached frame out-of-band left the dead
-    entry in _CORPUS_CACHES, shrinking the effective cap for the rest of
-    the session and double-unpersisting on eviction). Returns whether the
-    frame was tracked."""
-    tracked = any(c is frame for c in _CORPUS_CACHES)
-    _CORPUS_CACHES[:] = [c for c in _CORPUS_CACHES if c is not frame]
-    try:
-        frame.unpersist(False)
-    except Exception:
-        pass
-    return tracked
 
 
 def ngram_overlap_decontamination(

@@ -110,6 +110,115 @@ def _settle_async_counts() -> None:
         raise first_exc
 
 
+# Every frame the operators persist (collapse maps, LSH signature and
+# banded frames, curation corpus frames), oldest first. The cap is the
+# sum of the two earlier per-module caps (collapse 4 + corpus 6): the
+# largest live set one entry point builds is decontaminate_canonical_lsh's
+# 7 frames, so no single call evicts its own caches.
+_CACHES: list = []
+_CACHE_CAP = 10
+
+
+def _spill_level(cached_mem_bytes: int, max_heap_bytes: int):
+    """Pick the storage level for the NEXT persisted frame: once the
+    already-cached bytes crowd the unified storage pool (~30% of heap at
+    the default spark.memory.fraction), further caches go straight to
+    DISK_ONLY instead of competing with 32 concurrent column builders
+    for storage memory (VERDICT r10 #5: at the 2700x octave the
+    corpus-signature cache build OOM'd a 32g local driver — local mode
+    concentrates every task's builder plus the whole storage pool in one
+    JVM; on a real cluster the same cache is partitioned across
+    executors, so this guard only ever bites in local mode or on a
+    genuinely undersized executor). Pure function for testability."""
+    from pyspark import StorageLevel
+
+    if cached_mem_bytes > 0.30 * max_heap_bytes:
+        return StorageLevel.DISK_ONLY
+    return StorageLevel.MEMORY_AND_DISK
+
+
+def _persist(frame: DataFrame) -> DataFrame:
+    """Persist ``frame`` into the bounded operator-cache registry.
+
+    - A frame whose plan is already cached (an equal plan persisted by an
+      earlier call) comes back as is and is not registered again:
+      evicting the older entry would unpersist the cache this caller
+      reads.
+    - Otherwise the oldest entries are evicted BEFORE appending, so the
+      live set never exceeds ``_CACHE_CAP`` even mid-call (ADVICE r08).
+      Evicted frames stay correct; they recompute on their next action.
+    - The level is MEMORY_AND_DISK, or DISK_ONLY past the
+      ``_spill_level`` storage-pressure probe.
+    - It never counts. A caller whose frame must be materialized before
+      planning (measured InMemoryRelation stats, the r09
+      BroadcastOverGenerate class) calls ``.count()`` itself.
+    """
+    from pyspark import StorageLevel
+
+    if frame.storageLevel != StorageLevel.NONE:
+        return frame
+    while len(_CACHES) >= _CACHE_CAP:
+        _release(_CACHES[0])
+    level = StorageLevel.MEMORY_AND_DISK
+    try:
+        sc = frame.sparkSession.sparkContext
+        # memSize + diskSize (ADVICE r11): memSize alone counts only blocks
+        # currently RESIDENT in memory, so once earlier caches spill the
+        # probe re-armed MEMORY_AND_DISK in exactly the saturated regime it
+        # targets. Disk-resident bytes overcount storage-POOL pressure, but
+        # the guard is local-mode-only and the conservative direction
+        # (going DISK_ONLY a frame early) costs a re-read, not an OOM.
+        cached = sum(
+            i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()
+        )
+        heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
+        level = _spill_level(cached, heap)
+        if level != StorageLevel.MEMORY_AND_DISK:
+            _LOG.warning(
+                "operator cache: %.1f GiB already cached vs %.1f GiB heap — "
+                "persisting the next frame DISK_ONLY to keep the storage "
+                "pool from evicting/OOMing mid-build",
+                cached / 2**30,
+                heap / 2**30,
+            )
+    except Exception:  # storage telemetry is best-effort, never fatal
+        pass
+    out = frame.persist(level)
+    _CACHES.append(out)
+    return out
+
+
+def _release(frame: DataFrame) -> bool:
+    """Unpersist ``frame`` AND drop it from the registry (ADVICE r11: an
+    out-of-band unpersist left the dead entry registered, shrinking the
+    effective cap and double-unpersisting on eviction). Returns whether
+    the frame was registered."""
+    tracked = any(c is frame for c in _CACHES)
+    _CACHES[:] = [c for c in _CACHES if c is not frame]
+    try:
+        frame.unpersist(False)
+    except Exception:
+        pass
+    return tracked
+
+
+def release_caches() -> int:
+    """Unpersist every frame the operators registered via ``_persist``.
+
+    Call after materializing the result of an operator pipeline
+    (minhash_lsh_pairs, simhash_near_pairs, the dedup and curation
+    pipelines) to return its cached partitions; re-running the result
+    afterwards stays correct — it recomputes. Without a call the registry
+    still evicts oldest-first past ``_CACHE_CAP``, so a long-lived session
+    stays bounded either way (ADVICE r05). Returns the number of frames
+    released.
+    """
+    n = len(_CACHES)
+    while _CACHES:
+        _release(_CACHES[-1])
+    return n
+
+
 def normalized_text(col: Column | str) -> Column:
     """Lowercase + whitespace-collapse + trim — the canonical form every
     dedup strategy fingerprints."""
@@ -141,22 +250,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     )
     return F.array_distinct(
         F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<string>"))
-    )
-
-
-def shingle_hashes(col: Column | str, n: int = 3) -> Column:
-    """Distinct 64-bit hashes of word n-gram shingles, skipping string
-    construction: xxhash64 over the n token columns directly gives the same
-    information minhash needs at a fraction of the cost (no concat, no
-    string hashing). Collision probability at 64 bits is negligible for
-    signature purposes; exact verification still uses string shingles."""
-    t = tokens(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (n - 1)),
-        lambda i: F.xxhash64(*[F.element_at(t, (i + j).cast("int")) for j in range(n)]),
-    )
-    return F.array_distinct(
-        F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<long>"))
     )
 
 
@@ -292,9 +385,9 @@ def _shingle_hash_rows(
     carry: dict[str, Column] | None = None,
 ) -> DataFrame:
     """(id, sh): one row per n-gram occurrence, sh = xxhash64 over the n
-    token columns — bit-identical to shingle_hashes() elements (verified
-    by a full-corpus set comparison when this path landed) but built
-    entirely from native codegen expressions, zero exchange.
+    token columns of each n-gram (one fixed-width hash per shingle, no
+    string built), entirely from native codegen expressions, zero
+    exchange.
 
     Why not HOF: transform/element_at lambdas are interpreted, not
     whole-stage-codegen'd — profiling showed ~25µs per shingle, 14s for
@@ -322,10 +415,8 @@ def _shingle_hash_rows(
       pinned by the shingle-formulation rows in tools/stage_bench.py so
       a future swap can't regress silently.
 
-    Same values row-for-row (xxhash64 over the same n token columns;
-    duplicates retained — min/collect_set downstream are duplicate-
-    insensitive); docs with fewer than n tokens emit no rows, matching
-    shingle_hashes' empty-array semantics.
+    Duplicates are retained — min/collect_set downstream are duplicate-
+    insensitive; docs with fewer than n tokens emit no rows.
     """
     toks = tokens(text_col)
     extra = [c.alias(name) for name, c in (carry or {}).items()]
@@ -349,36 +440,6 @@ def _shingle_hash_rows(
         F.xxhash64(
             *[F.element_at("tk", (F.col("p") + k).cast("int")) for k in range(n)]
         ).alias("sh"),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """MinHash signature per document: sig_j = min over shingles of
-    hash_j(shingle). Seeded literals -> reproducible. One explode + one
-    groupBy; the k mins aggregate map-side, so the shuffle carries one row
-    per document.
-
-    Shingle strings are never materialized here: _shingle_hash_rows hashes
-    the n token columns directly (one fixed-width hash per shingle), and
-    the k per-seed hashes derive from that 64-bit value — the same
-    independence structure (seeded re-hash of a uniform 64-bit input) at a
-    fraction of the string-building cost. The whole pipeline stays in
-    scalar whole-stage codegen (see _shingle_hash_rows for why the
-    higher-order-function formulation was abandoned); the k mins aggregate
-    map-side, so the one shuffle carries per-doc combine output, not the
-    token stream. Documents with no shingle (< n tokens) are dropped."""
-    rows = _shingle_hash_rows(df, text_col, id_col, n)
-    return rows.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("sh"))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
     )
 
 
@@ -454,26 +515,6 @@ def _exact_text_collapse(
     hot key of 16-byte rows, not of documents; no collect_list arrays
     anywhere. reps filters via an id-keyed semi-join (uniform keys).
     """
-    from pyspark import StorageLevel
-
-    # Bound cache accumulation across repeated calls in a long-lived
-    # session (ADVICE r05): keep the newest few frames, evict the rest
-    # FIFO. Evicted frames stay correct (they recompute on next action);
-    # the cap only exists so a session that never calls
-    # release_collapse_caches() holds O(1) cached maps, not O(#calls).
-    # Eviction runs before EACH append (the r09 grp cache made this a
-    # two-append call, which with entry-only eviction held cap+1 live —
-    # the same transient-overflow class ADVICE r08 flagged in curation).
-    def _cache_collapse(frame: DataFrame) -> DataFrame:
-        while len(_COLLAPSE_CACHES) >= _COLLAPSE_CACHE_CAP:
-            try:
-                _COLLAPSE_CACHES.pop(0).unpersist(False)
-            except Exception:
-                pass
-        out = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        _COLLAPSE_CACHES.append(out)
-        return out
-
     kl, kh = F.length(F.col(text_col)), F.xxhash64(F.col(text_col))
     keyed = df.select(
         F.col(id_col).alias("member"), kl.alias("_kl"), kh.alias("_kh")
@@ -485,18 +526,14 @@ def _exact_text_collapse(
     # a MATERIALIZED InMemoryRelation reports its measured size, so the
     # planner broadcasts it exactly when it truly fits (small corpora)
     # and never when it doesn't.
-    grp = _cache_collapse(
-        keyed.groupBy("_kl", "_kh").agg(F.min("member").alias("rep"))
-    )
+    grp = _persist(keyed.groupBy("_kl", "_kh").agg(F.min("member").alias("rep")))
     # (no count here: members' eager count below materializes grp
     # transitively — one materialization job, two measured caches)
     # members feeds BOTH sides of the cross expansion and both sides of
     # the within self-join (4 references) — persist or the whole collapse
     # pipeline (document scan included) re-executes per reference. Two
     # longs per doc: a sliver at any scale.
-    members = _cache_collapse(
-        keyed.join(grp, ["_kl", "_kh"]).select("rep", "member")
-    )
+    members = _persist(keyed.join(grp, ["_kl", "_kh"]).select("rep", "member"))
     # Eager, same reason — but for a provably-small file-backed source the
     # count runs CONCURRENTLY with the pipeline's next construction job
     # (guide §2.6; see _SMALL_SOURCE_BYTES for why the stats race is safe
@@ -510,9 +547,6 @@ def _exact_text_collapse(
     )
     return reps, members
 
-
-_COLLAPSE_CACHES: list = []
-_COLLAPSE_CACHE_CAP = 4
 
 # max_bucket="auto" budget: allowed candidate emissions per banded row
 # before the skew guard engages (see minhash_lsh_pairs docstring). 64 is
@@ -583,11 +617,11 @@ def _flood_escalation(
 # the measured working point: the 2700x octave's 1.2 GB documents table
 # ran the canonical pipelines at 32 GB heap with 512 partitions (r11,
 # BENCH_SCALE.md) = 2.3 MiB/partition, while 32 partitions — the local
-# default — OOMs the pass-2 corpus materialization at that octave (r12,
-# measured on this host: Java heap space in _cache_persisted). Gate/bench
-# SFs sit far below the floor (sf0.1 documents ≈ 2 MB -> want 1), so
-# their plans and walls are untouched; AQE coalesces any over-partitioned
-# small stage right back.
+# default — OOMs the pass-2 corpus materialization at that octave (r12:
+# Java heap space in the corpus cache build). Gate/bench SFs sit far
+# below the floor (sf0.1 documents ≈ 2 MB -> want 1), so their plans and
+# walls are untouched; AQE coalesces any over-partitioned small stage
+# right back.
 _SCALE_BYTES_PER_PARTITION = 2 * 1024 * 1024
 _SCALE_PARTITION_CAP = 2048
 
@@ -677,27 +711,6 @@ def scale_partition_floor(df: DataFrame) -> int | None:
             total / 2**30,
         )
     return want
-
-
-def release_collapse_caches() -> int:
-    """Unpersist every member map cached by `_exact_text_collapse`.
-
-    Call after materializing the result of a collapse-backed query
-    (minhash_lsh_pairs / simhash_near_pairs / dedup pipelines) to return
-    the cached (rep, member) partitions; re-running the result DataFrame
-    afterwards stays correct — it just recomputes the map. Without an
-    explicit call, `_exact_text_collapse` itself evicts FIFO past a small
-    cap, so long-lived sessions stay bounded either way (ADVICE r05).
-    Returns the number of frames released.
-    """
-    n = 0
-    while _COLLAPSE_CACHES:
-        try:
-            _COLLAPSE_CACHES.pop().unpersist(False)
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def _expand_member_pairs(
@@ -949,7 +962,15 @@ def minhash_lsh_pairs(
     src, band_src, band_cols = _lsh_signatures(
         df, text_col, id_col, n, num_hashes, bipartite, sig_source, bipartite_col
     )
-    banded = _lsh_banded(band_src, band_cols, num_hashes, bands)
+    rows = num_hashes // bands
+    banded = _lsh_banded(
+        band_src,
+        band_cols,
+        [
+            F.xxhash64(*[F.col(f"mh{bid * rows + r}") for r in range(rows)])
+            for bid in range(bands)
+        ],
+    )
     audit = _lsh_cap_audit(
         banded, band_cols, candidate_scope, max_bucket, full=stats is not None
     )
@@ -960,12 +981,7 @@ def minhash_lsh_pairs(
         # Probe instrumentation (tools/dedup_probe.py): the bucket numbers
         # come from the audit (no extra job); only candidates_distinct
         # costs a probe-only pass.
-        stats["bucket_join_work"] = audit.kept_work
-        stats["max_bucket_size"] = audit.max_kept
-        stats["dropped_buckets"] = audit.dropped_buckets
-        stats["dropped_emissions"] = audit.dropped_emissions
-        stats["effective_max_bucket"] = audit.eff_cap
-        stats["banded_rows"] = audit.banded_rows
+        _cap_stats(stats, audit)
         stats["candidates_distinct"] = cand.count()
     if verify == "grouped":
         verified = _lsh_verify_grouped(
@@ -1008,8 +1024,6 @@ def _lsh_signatures(
     both verification sides); ``band_src`` is ``src`` carrying the
     bipartite label as ``_lbl``; ``band_cols`` is ``["_lbl"]`` when there
     is a label, else ``[]``."""
-    from pyspark import StorageLevel
-
     # (id, label) projection for bipartite filtering, taken AFTER collapse —
     # sound only for content-determined labels (identical texts share a
     # label, so the rep's label is every member's). Joined onto the
@@ -1026,9 +1040,7 @@ def _lsh_signatures(
     else:
         # (materialized transitively by the audit job: banded derives from
         # src, so one job measures both caches)
-        src = signature_sets(df, text_col, id_col, n, num_hashes).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        src = _persist(signature_sets(df, text_col, id_col, n, num_hashes))
     if lbl is not None:
         return src, src.join(lbl, "id"), ["_lbl"]
     if bipartite_col is not None:
@@ -1043,33 +1055,18 @@ def _lsh_signatures(
 
 
 def _lsh_banded(
-    band_src: DataFrame, band_cols: list[str], num_hashes: int, bands: int
+    band_src: DataFrame, carry: list[str], keys: list[Column]
 ) -> DataFrame:
-    """LSH stage 2 — banding: one ``(id[, _lbl], band, bkey)`` row per doc
-    per band, ``bkey`` = xxhash64 of the band's ``num_hashes // bands``
-    mins. Persisted: it feeds the audit, bucket sizing, and both
-    self-join sides — a narrow sliver of corpus size at any scale."""
-    from pyspark import StorageLevel
-
-    rows = num_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(bid).alias("band"),
-            F.xxhash64(*[F.col(f"mh{bid * rows + r}") for r in range(rows)]).alias(
-                "bkey"
-            ),
+    """LSH stage 2 — banding: one ``(id, carry..., band, bkey)`` row per
+    doc per band, ``bkey`` = the band's key Column (``keys[band]``) —
+    minhash passes xxhash64 of each band's rows of mins, simhash its
+    fingerprint chunks. Persisted: it feeds the audit, bucket sizing, and
+    both self-join sides — a narrow sliver of corpus size at any scale."""
+    bb = [F.struct(F.lit(b).alias("band"), k.alias("bkey")) for b, k in enumerate(keys)]
+    return _persist(
+        band_src.select("id", *carry, F.explode(F.array(*bb)).alias("bb")).select(
+            "id", *carry, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
         )
-        for bid in range(bands)
-    ]
-    return (
-        band_src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
-        .select(
-            "id",
-            *band_cols,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bkey").alias("bkey"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -1082,6 +1079,16 @@ class _CapAudit(NamedTuple):
     banded_rows: int
     dropped_buckets: int
     dropped_emissions: int
+
+
+def _cap_stats(stats: dict, audit: _CapAudit) -> None:
+    """Fill the six cap-audit ``stats`` keys both LSH families report."""
+    stats["bucket_join_work"] = audit.kept_work
+    stats["max_bucket_size"] = audit.max_kept
+    stats["dropped_buckets"] = audit.dropped_buckets
+    stats["dropped_emissions"] = audit.dropped_emissions
+    stats["effective_max_bucket"] = audit.eff_cap
+    stats["banded_rows"] = audit.banded_rows
 
 
 def _bucket_size_histogram(
@@ -1178,7 +1185,7 @@ def _lsh_cap_audit(
                     break
                 eff_cap = c
             _LOG.warning(
-                "minhash_lsh_pairs: max_bucket='auto' engaged the skew "
+                "LSH cap audit: max_bucket='auto' engaged the skew "
                 "guard at cap=%d — uncapped candidate volume %d emissions "
                 "(%.1f per banded row) exceeds the budget of %.0f per "
                 "banded row x %d rows. If this corpus's large buckets are "
@@ -1198,15 +1205,14 @@ def _lsh_cap_audit(
     )
     if dropped_buckets > 0 and not isinstance(max_bucket, str):
         _LOG.warning(
-            "minhash_lsh_pairs: max_bucket=%d dropped %d flooded bucket(s) "
+            "LSH cap audit: max_bucket=%d dropped %d flooded bucket(s) "
             "= %d candidate emissions before verification. The output cost "
             "grows with duplicate multiplicity: measured 0%% of merges at "
             "300x, 0.5%% at 900x, but 50%% at 2700x — where true dup "
             "families outgrew the cap and the dropped buckets WERE the dup "
             "families (BENCH_SCALE.md cap-recall). Size max_bucket above "
-            "the expected duplicate family size, or pass max_bucket=None / "
-            "'auto' (grouped verification keeps the flood executable) if "
-            "this corpus needs those pairs",
+            "the expected duplicate family size, or lift the cap if this "
+            "corpus needs those pairs",
             eff_cap,
             dropped_buckets,
             total_work - kept_work,
@@ -1221,6 +1227,21 @@ def _lsh_cap_audit(
     )
 
 
+def _bucket_sized(banded: DataFrame, eff_cap: int | None) -> DataFrame:
+    """``banded`` with its bucket size ``bsz``, less the buckets over
+    ``eff_cap`` (None keeps all). A count window, not groupBy + join-back:
+    the window's one (band, bkey) exchange is exactly the partitioning the
+    self-join needs, so the filter is map-side relative to it (the
+    agg+join formulation re-scanned the banded frame twice — measured 3x
+    slower at sf0.1)."""
+    from pyspark.sql import Window
+
+    sized = banded.withColumn(
+        "bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey"))
+    )
+    return sized if eff_cap is None else sized.filter(F.col("bsz") <= eff_cap)
+
+
 def _lsh_candidates(
     banded: DataFrame,
     band_cols: list[str],
@@ -1232,16 +1253,12 @@ def _lsh_candidates(
     size ``bsz`` (and, for star, the bucket min ``bmin``), capped;
     ``banded_ok`` the surviving ``(id, band, bkey)`` rows; ``cand`` the
     distinct ``(id_a < id_b)`` candidates — star edges, all in-bucket
-    pairs, or (with a label) cross-label pairs only.
-
-    Sizing is a count window, not groupBy + join-back: the window's one
-    (band, bkey) exchange is exactly the partitioning the self-join needs,
-    so the filter is map-side relative to it (the agg+join formulation
-    re-scanned the banded frame twice — measured 3x slower at sf0.1)."""
+    pairs, or (with a label) cross-label pairs only. Sizing is
+    ``_bucket_sized``'s count window."""
     from pyspark.sql import Window
 
-    wb = Window.partitionBy("band", "bkey")
     if candidate_scope == "star":
+        wb = Window.partitionBy("band", "bkey")
         # (bucket-min, member) edges ride the SAME window exchange the size
         # filter pays — no self-join stage; bmin < id orders the pair free.
         sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb)).withColumn(
@@ -1256,9 +1273,7 @@ def _lsh_candidates(
             .distinct()
         )
         return sized, banded_ok, cand
-    sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
-    if eff_cap is not None:
-        sized = sized.filter(F.col("bsz") <= eff_cap)
+    sized = _bucket_sized(banded, eff_cap)
     banded_ok = sized.select("id", *band_cols, "band", "bkey")
     x, y = banded_ok.alias("x"), banded_ok.alias("y")
     join_cond = (
@@ -1878,83 +1893,52 @@ def simhash_near_pairs(
     buckets, so at billions of documents every bucket is crowded and the
     pigeonhole join goes quadratic regardless of duplicate structure; at
     that scale cap the buckets (trading the recall guarantee for bounded
-    work) or widen the fingerprint/chunks. The cap is never silent: pass
-    ``stats`` (probe-only — it forces one count) to receive
-    dropped_buckets / dropped_emissions, same contract as
-    minhash_lsh_pairs (VERDICT r09 #2)."""
+    work) or widen the fingerprint/chunks. The cap follows
+    minhash_lsh_pairs' audit contract (``_lsh_cap_audit``, VERDICT r09
+    #2): its fast path is one count of the banded frame while the
+    worst-case kept volume sits under the flood bound; otherwise, and
+    always with ``stats``, the full bucket-size audit runs and WARNs
+    when the cap bites. ``stats`` receives the same six keys
+    (bucket_join_work, max_bucket_size, dropped_buckets,
+    dropped_emissions, effective_max_bucket, banded_rows); uncapped runs
+    leave it untouched.
+
+    Banding, the cap audit, and the bucket-size window are the shared
+    LSH stages (``_lsh_banded``, ``_lsh_cap_audit``, ``_bucket_sized``);
+    this function owns the fingerprint, the Hamming join, and the member
+    fan-out."""
     if max_hamming >= chunks:
         raise ValueError(
             f"simhash_near_pairs requires max_hamming < chunks for full recall "
             f"(got max_hamming={max_hamming}, chunks={chunks}); "
             f"use chunks={max_hamming + 1} or more"
         )
-    from pyspark import StorageLevel
-
     members = None
     if collapse_exact:
         df, members = _exact_text_collapse(df, text_col, id_col)
-    fps = simhash(df, text_col, id_col)
     width = 64 // chunks
-    chunk_cols = [
-        F.shiftrightunsigned(F.col("simhash"), i * width)
-        .bitwiseAND(F.lit((1 << width) - 1))
-        .alias(f"c{i}")
-        for i in range(chunks)
-    ]
-    banded = fps.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("chunk"), chunk_cols[i].alias("ckey"))
-                    for i in range(chunks)
-                ]
+    banded = _lsh_banded(
+        simhash(df, text_col, id_col),
+        ["simhash"],
+        [
+            F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
+                F.lit((1 << width) - 1)
             )
-        ).alias("bb"),
-    ).select("id", "simhash", F.col("bb.chunk").alias("chunk"), F.col("bb.ckey").alias("ckey"))
-    if max_bucket is not None:
+            for i in range(chunks)
+        ],
+    )
+    if max_bucket is None:
+        # Eager count: both self-join sides reference banded, and a
+        # MATERIALIZED InMemoryRelation gives the static planner measured
+        # stats for the corpus x chunks frame — no Generate-collapsed
+        # estimate can broadcast it (the r09 BroadcastOverGenerate class).
+        banded.count()
+    else:
+        # the audit's job (a count on its fast path) materializes banded
+        audit = _lsh_cap_audit(banded, [], "all", max_bucket, full=stats is not None)
         if stats is not None:
-            # loud cap (VERDICT r09 #2): what did the cap discard?
-            kept = F.col("count") <= max_bucket
-            work = F.col("count") * (F.col("count") - 1) / 2
-            bw = (
-                banded.groupBy("chunk", "ckey")
-                .count()
-                .agg(
-                    F.sum(F.when(kept, work)).alias("w"),
-                    F.sum((~kept).cast("long")).alias("db"),
-                    F.sum(F.when(~kept, work)).alias("de"),
-                )
-                .collect()[0]
-            )
-            stats["bucket_join_work"] = int(bw["w"] or 0)
-            stats["dropped_buckets"] = int(bw["db"] or 0)
-            stats["dropped_emissions"] = int(bw["de"] or 0)
-        # same count-window shape as minhash_lsh_pairs: the sizing
-        # exchange IS the self-join's partitioning
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("chunk", "ckey")
-        banded = (
-            banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("bsz") <= max_bucket)
-            .drop("bsz")
-        )
-    # Persist + eager count: both self-join sides reference banded (one
-    # recompute saved), and a MATERIALIZED InMemoryRelation gives the
-    # static planner measured stats for the corpus x chunks frame — no
-    # Generate-collapsed estimate can broadcast it (the r09
-    # BroadcastOverGenerate class). Same bounded-FIFO cache as collapse,
-    # same evict-before-append discipline.
-    while len(_COLLAPSE_CACHES) >= _COLLAPSE_CACHE_CAP:
-        try:
-            _COLLAPSE_CACHES.pop(0).unpersist(False)
-        except Exception:
-            pass
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()
-    _COLLAPSE_CACHES.append(banded)
+            _cap_stats(stats, audit)
+        banded = _bucket_sized(banded, audit.eff_cap).drop("bsz")
     # the banded count above is the overlap window for the collapse's
     # async member count (small-source regime) — settle before returning
     _settle_async_counts()
@@ -1962,8 +1946,8 @@ def simhash_near_pairs(
     verified = (
         x.join(
             y,
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.ckey") == F.col("y.ckey"))
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bkey") == F.col("y.bkey"))
             & (F.col("x.id") < F.col("y.id")),
         )
         .select(

@@ -17,6 +17,9 @@ _LOG = logging.getLogger(__name__)
 
 # Upper bound on an Observation.get wait; see observation_or_none.
 _OBS_WAIT_SECONDS = 30
+# Spark application ids whose Observation metrics have timed out once;
+# observation_or_none stops waiting for the rest of those applications.
+_OBS_LATCHED: set = set()
 
 
 def get_spark(
@@ -144,10 +147,21 @@ def observation_or_none(obs, what: str) -> dict | None:
     metric does not arrive or ``get`` raises. A raising ``get`` posts its
     exception from the worker thread, so the caller falls back at once
     instead of waiting out the bound. ``what`` names the caller in the
-    fallback WARN."""
+    fallback WARN.
+
+    The first timeout latches for the rest of the Spark application:
+    later calls return None at once, so a drifted listener costs one
+    bound per application, not one per round or micro-batch. The latch
+    is WARNed once. A raising ``get`` does not latch."""
     import queue
     import threading
 
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    app = sc.applicationId if sc is not None else None
+    if app in _OBS_LATCHED:
+        return None
     q: queue.Queue = queue.Queue()
 
     def _get() -> None:
@@ -160,10 +174,13 @@ def observation_or_none(obs, what: str) -> dict | None:
     try:
         got = q.get(timeout=_OBS_WAIT_SECONDS)
     except queue.Empty:
+        _OBS_LATCHED.add(app)
         _LOG.warning(
-            "%s: observed metric not delivered in %ss — falling back",
+            "%s: observed metric not delivered in %ss — falling back; "
+            "observed metrics are off for the rest of Spark application %s",
             what,
             _OBS_WAIT_SECONDS,
+            app,
         )
         return None
     if isinstance(got, Exception):

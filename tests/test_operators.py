@@ -1079,18 +1079,48 @@ def test_exact_sum_negative_boundary_and_nulls(spark):
 
 def test_collapse_cache_registry_bounded(spark):
     """ADVICE r05: repeated collapse-backed calls in one session must not
-    accumulate persisted member maps without bound; release() empties."""
+    accumulate persisted frames without bound; release_caches() empties
+    the registry. A frame whose plan is already cached registers once:
+    evicting the first entry would unpersist the cache both calls read."""
     from kafka_etl_automation_spark.operators import dedup
 
+    dedup.release_caches()
     df = spark.createDataFrame(
         [(i, f"text {i % 3}") for i in range(12)], "doc_id long, text string"
     )
-    for _ in range(dedup._COLLAPSE_CACHE_CAP + 3):
-        reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
-        members.count()
-    assert len(dedup._COLLAPSE_CACHES) <= dedup._COLLAPSE_CACHE_CAP
-    assert dedup.release_collapse_caches() >= 1
-    assert not dedup._COLLAPSE_CACHES
+    dedup._exact_text_collapse(df, "text", "doc_id")
+    assert len(dedup._CACHES) == 2  # grp + members
+    dedup._exact_text_collapse(df, "text", "doc_id")
+    assert len(dedup._CACHES) == 2  # same plans: not registered again
+    for k in range(dedup._CACHE_CAP + 3):
+        distinct = df.withColumn("text", F.concat("text", F.lit(f" v{k}")))
+        dedup._exact_text_collapse(distinct, "text", "doc_id")
+        assert len(dedup._CACHES) <= dedup._CACHE_CAP
+    assert dedup.release_caches() >= 1
+    assert not dedup._CACHES
+
+
+def test_lsh_persists_stay_under_the_cache_cap(spark):
+    """Every frame minhash_lsh_pairs persists (collapse maps, signatures,
+    banded rows) goes through the one bounded registry: repeated calls on
+    distinct inputs never hold more than the cap of persisted RDDs, and
+    release_caches() returns the context to its pre-call count."""
+    from kafka_etl_automation_spark.operators import dedup
+
+    dedup.release_caches()
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    kw = dict(n=3, num_hashes=16, bands=4, threshold=0.5)
+    for k in range(6):
+        df = spark.createDataFrame(
+            [(i, f"call {k} shared words here doc {i % 9} tail {i % 4}")
+             for i in range(40)],
+            "doc_id long, text string",
+        )
+        dedup.minhash_lsh_pairs(df, **kw).count()
+        assert jsc.getPersistentRDDs().size() - before <= dedup._CACHE_CAP
+    assert dedup.release_caches() == dedup._CACHE_CAP
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_canonical_keep_list_invariants(spark):
@@ -1619,7 +1649,7 @@ def test_grouped_verify_matches_pairs(spark):
         )
 
 
-def test_lsh_cap_stats_are_loud(spark):
+def test_lsh_cap_stats_are_loud(spark, caplog):
     """VERDICT r09 #2: the max_bucket cap must never discard candidates
     silently — stats reports dropped_buckets / dropped_emissions in both
     LSH families, and they reconcile with the uncapped run."""
@@ -1654,13 +1684,26 @@ def test_lsh_cap_stats_are_loud(spark):
         st_cap["bucket_join_work"] + st_cap["dropped_emissions"]
         == st_open["bucket_join_work"]
     )
-    # simhash's opt-in cap reports the same stats contract
+    # simhash's opt-in cap runs the same audit: same stats contract, same
+    # conservation, and the full audit (stats=) WARNs on a bite
+    import logging
+
+    sim_kw = dict(max_hamming=3, chunks=4, collapse_exact=False)
+    st_sim_open: dict = {}
+    dedup.simhash_near_pairs(df, max_bucket=1000, stats=st_sim_open, **sim_kw)
+    assert st_sim_open["dropped_buckets"] == 0
     st_sim: dict = {}
-    dedup.simhash_near_pairs(
-        df, max_hamming=3, chunks=4, collapse_exact=False,
-        max_bucket=2, stats=st_sim,
-    ).count()
+    caplog.clear()  # the minhash max_bucket=2 run above WARNed too
+    with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+        dedup.simhash_near_pairs(df, max_bucket=2, stats=st_sim, **sim_kw).count()
     assert st_sim["dropped_buckets"] > 0 and st_sim["dropped_emissions"] > 0
+    assert set(st_sim) == set(st_cap) - {"candidates_distinct"}
+    assert (
+        st_sim["bucket_join_work"] + st_sim["dropped_emissions"]
+        == st_sim_open["bucket_join_work"]
+    )
+    hits = [r for r in caplog.records if "max_bucket=2 dropped" in r.getMessage()]
+    assert len(hits) == 1 and hits[0].levelno == logging.WARNING
 
 
 def test_lsh_cap_warns_in_shipping_path(spark, caplog, monkeypatch):
@@ -2035,23 +2078,23 @@ def test_spill_level_probe(spark):
     a live session so the guard isn't silently dead."""
     from pyspark import StorageLevel
 
-    from kafka_etl_automation_spark.operators import curation
+    from kafka_etl_automation_spark.operators import dedup
 
     gib = 2**30
-    assert curation._spill_level(0, 32 * gib) == StorageLevel.MEMORY_AND_DISK
-    assert curation._spill_level(9 * gib, 32 * gib) == StorageLevel.MEMORY_AND_DISK
-    assert curation._spill_level(11 * gib, 32 * gib) == StorageLevel.DISK_ONLY
+    assert dedup._spill_level(0, 32 * gib) == StorageLevel.MEMORY_AND_DISK
+    assert dedup._spill_level(9 * gib, 32 * gib) == StorageLevel.MEMORY_AND_DISK
+    assert dedup._spill_level(11 * gib, 32 * gib) == StorageLevel.DISK_ONLY
     # live telemetry path: a small frame stays MEMORY_AND_DISK and the
     # JVM storage APIs the probe uses are reachable
     sc = spark.sparkContext
     assert int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory()) > 0
-    df = curation._cache_persisted(spark.range(10).toDF("id"))
+    df = dedup._persist(spark.range(10).toDF("id"))
     assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
-    # release via the tracked-cache helper, NOT a bare unpersist (ADVICE
-    # r11: out-of-band unpersist left the dead frame in _CORPUS_CACHES,
-    # shrinking the effective cap for later tests in the same session)
-    assert curation._cache_release(df) is True
-    assert all(c is not df for c in curation._CORPUS_CACHES)
+    # release via the registry helper, NOT a bare unpersist (ADVICE r11:
+    # out-of-band unpersist left the dead frame registered, shrinking the
+    # effective cap for later tests in the same session)
+    assert dedup._release(df) is True
+    assert all(c is not df for c in dedup._CACHES)
 
 
 def test_grouped_bucket_blocks_are_sorted(spark):

@@ -547,7 +547,9 @@ def test_observation_or_none_bounds_the_wait(monkeypatch):
     """Engine-drift guard: an observation whose metric never arrives must
     return None (caller falls back to the dedicated stats job), not hang;
     one whose ``get`` raises must return None at once, not after the
-    full bound."""
+    full bound. The first timeout latches for the Spark application —
+    later calls return None without waiting — but a raising ``get`` does
+    not latch."""
     import time as _t
 
     from kafka_etl_automation_spark import session
@@ -562,10 +564,19 @@ def test_observation_or_none_bounds_the_wait(monkeypatch):
         def get(self):
             raise RuntimeError("listener drift")
 
-    monkeypatch.setattr(session, "_OBS_WAIT_SECONDS", 1)
-    assert session.observation_or_none(_NeverDelivers(), "test") is None
-    # back to the full bound: returning under 1 s proves no wait
+    # a fresh latch, restored afterwards so later tests keep observing
+    monkeypatch.setattr(session, "_OBS_LATCHED", set())
+    # the full bound: returning under 1 s proves no wait
     monkeypatch.setattr(session, "_OBS_WAIT_SECONDS", 30)
     t0 = _t.monotonic()
     assert session.observation_or_none(_Raises(), "test") is None
     assert _t.monotonic() - t0 < 1.0
+    # not latched by the raise: the first timeout waits the patched bound
+    monkeypatch.setattr(session, "_OBS_WAIT_SECONDS", 1)
+    t0 = _t.monotonic()
+    assert session.observation_or_none(_NeverDelivers(), "test") is None
+    assert _t.monotonic() - t0 >= 0.9
+    # latched: the next call returns at once
+    t0 = _t.monotonic()
+    assert session.observation_or_none(_NeverDelivers(), "test") is None
+    assert _t.monotonic() - t0 < 0.1

@@ -104,7 +104,7 @@ def main() -> int:
             flush=True,
         )
         pairs.unpersist()
-        dedup.release_collapse_caches()
+        dedup.release_caches()
         spark.catalog.clearCache()
     return 0
 
