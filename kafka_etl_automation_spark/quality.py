@@ -18,11 +18,12 @@ validation queries, which log a PASS/FAIL row per check:
 - audit sink: append results + timestamp to a parquet log table, the
   ``*_TEST_LOG`` pattern (/root/reference/fact_dim_merging.sh:107-110) (S9)
 
-Scale notes: every combinator is a single lazy plan. count_check is two
-map-side-combinable counts; data_diff's ``except`` pair shuffles each input
-twice (inherent to exact set-diff — the reference pays the same via MINUS);
-dup_check is one hash aggregation; null_check is a filtered count with the
-OR-of-nulls pushed to the scan.
+Scale notes: every combinator is a single lazy plan. count_check is one
+map-side-combinable aggregate over a side-tagged union of its inputs;
+data_diff's ``except`` pair shuffles each input twice (inherent to exact
+set-diff — the reference pays the same via MINUS); dup_check is one hash
+aggregation; null_check is a filtered count with the OR-of-nulls pushed to
+the scan.
 """
 
 from __future__ import annotations
@@ -46,10 +47,19 @@ def _result(name: str, ok, metric_a, metric_b) -> list:
 
 
 def count_check(source: DataFrame, target: DataFrame, name: str = "count_check") -> DataFrame:
-    """Q1: row-count equality. metric_a=source count, metric_b=target."""
-    a = source.agg(F.count(F.lit(1)).alias("ca"))
-    b = target.agg(F.count(F.lit(1)).alias("cb"))
-    return a.crossJoin(b).select(
+    """Q1: row-count equality. metric_a=source count, metric_b=target.
+
+    One aggregate over the side-tagged union of both inputs — one job,
+    where a crossJoin of two per-side counts schedules the broadcast
+    side's count as a job of its own."""
+    src = F.col("_src")
+    tagged = source.select(F.lit(True).alias("_src")).unionAll(
+        target.select(F.lit(False).alias("_src"))
+    )
+    agg = tagged.agg(
+        F.count(F.when(src, 1)).alias("ca"), F.count(F.when(~src, 1)).alias("cb")
+    )
+    return agg.select(
         *_result(name, F.col("ca") == F.col("cb"), F.col("ca"), F.col("cb"))
     )
 
@@ -201,6 +211,18 @@ def artifact_check(spark, path: str, name: str = "artifact_check") -> DataFrame:
         F.lit(1 if exists else 0).cast("long").alias("metric_a"),
         F.lit(0).cast("long").alias("metric_b"),
     )
+
+
+def collected_results(spark, rows: list, schema) -> DataFrame:
+    """Already-collected result rows as a frame of JVM literals (one
+    ``inline`` over ``spark.range(1)``), so a suite that ran once can be
+    audited without re-running it. ``createDataFrame`` on Python rows
+    would start the PySpark worker daemon for the write."""
+    structs = [
+        F.struct(*[F.lit(r[f.name]).cast(f.dataType).alias(f.name) for f in schema])
+        for r in rows
+    ]
+    return spark.range(0, 1, numPartitions=1).select(F.inline(F.array(*structs)))
 
 
 def append_audit(results: DataFrame, path: str, run_id: int | None = None) -> None:

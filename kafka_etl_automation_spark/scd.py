@@ -13,10 +13,11 @@ Re-expresses the reference's dimensional-load core (M1-M4):
 
 Design: ``scd_merge`` is a pure DataFrame -> DataFrame transform (current
 dim state + incoming snapshot -> new dim state), so Catalyst owns the
-physical plan: the single equi-join on the business key broadcasts when the
-incoming delta is small, sort-merges otherwise — the right call at both
-SFs and 100 TB. Persistence is plain parquet partitioned by
-``create_job_run_id`` with dynamic partition overwrite: re-writing a run id
+physical plan. Each type is a single equi-join on the business key: the
+static anti join broadcasts when the incoming delta is small; Types 1 and 2
+are one full-outer join read in one pass, which Spark shuffles (full outer
+never broadcasts) — one exchange per side at both SFs and 100 TB.
+Persistence is plain parquet partitioned by ``create_job_run_id`` with dynamic partition overwrite: re-writing a run id
 replaces exactly that partition (M3) without a table-format dependency.
 
 Type-2 current-row convention matches the reference: ``record_status='1'``
@@ -97,63 +98,43 @@ def scd_merge(
         new_keys = inc.join(cur.filter(F.col("record_status") == "1"), on, "left_anti")
         return current.unionByName(new_keys)
 
+    # Types 1 and 2 are one pass over one full-outer join: a per-row CASE
+    # yields each joined row's output rows, where a union of filtered
+    # copies of the join would plan (and run) the join once per copy.
+    # Side presence is tracked with explicit marker columns, not key-null
+    # checks: a legitimately NULL business-key value on either side would
+    # otherwise register as "row absent" and fabricate spurious all-NULL
+    # rows (code-review finding r02). Type 2 joins only the open versions;
+    # closed history passes through untouched.
+    cols = current.columns
+
+    def row(side: str, **over) -> F.Column:
+        return F.struct(*[over.get(c, F.col(f"{side}.{c}")).alias(c) for c in cols])
+
+    updated = F.lit(run_id).cast("long")
+    cur_side = cur if scd_type == "1" else cur.filter(F.col("record_status") == "1")
+    joined = cur_side.withColumn("_cur_present", F.lit(True)).join(
+        inc.withColumn("_inc_present", F.lit(True)), on, "full_outer"
+    )
     if scd_type == "1":
-        # Matched: take incoming attrs, keep create lineage, advance update.
-        merged_cols = (
-            [F.col(f"cur.{k}").alias(k) for k in keys]
-            + [F.col(f"inc.{a}").alias(a) for a in attrs]
-            + [
-                F.col("cur.create_job_run_id").alias("create_job_run_id"),
-                F.lit(run_id).cast("long").alias("update_job_run_id"),
-                F.col("cur.record_status").alias("record_status"),
-            ]
+        # incoming attrs in place, create lineage kept, update advances
+        in_place = {a: F.col(f"inc.{a}") for a in attrs}
+        matched = F.array(row("cur", **in_place, update_job_run_id=updated))
+    else:
+        # changed: close the current version by this run, open the incoming
+        closed = row("cur", update_job_run_id=updated, record_status=F.lit("0"))
+        matched = F.when(_changed(attrs), F.array(closed, row("inc"))).otherwise(
+            F.array(row("cur"))
         )
-        matched = cur.join(inc, on, "inner").select(*merged_cols)
-        unmatched_cur = cur.join(inc, on, "left_anti")
-        new_keys = inc.join(cur, on, "left_anti")
-        return unmatched_cur.unionByName(matched).unionByName(new_keys)
-
-    # type 2. Side presence is tracked with explicit marker columns, not
-    # key-null checks: a legitimately NULL business-key value on either
-    # side would otherwise register as "row absent" and fabricate spurious
-    # all-NULL rows (code-review finding r02).
-    cur_open = cur.filter(F.col("record_status") == "1").withColumn(
-        "_cur_present", F.lit(True)
+    out = (
+        F.when(F.col("_cur_present").isNull(), F.array(row("inc")))  # new key
+        .when(F.col("_inc_present").isNull(), F.array(row("cur")))  # not in the feed
+        .otherwise(matched)
     )
-    cur_closed = current.filter(F.col("record_status") == "0")
-    inc_marked = inc.withColumn("_inc_present", F.lit(True))
-    joined = cur_open.join(inc_marked, on, "full_outer")
-    cur_present = F.col("_cur_present").isNotNull()
-    inc_present = F.col("_inc_present").isNotNull()
-    is_match = cur_present & inc_present
-    changed = is_match & _changed(attrs)
-
-    keep_open = joined.filter(is_match & ~_changed(attrs)).select(
-        *[F.col(f"cur.{c}").alias(c) for c in current.columns]
-    )
-    closed_now = joined.filter(changed).select(
-        *[F.col(f"cur.{k}").alias(k) for k in keys],
-        *[F.col(f"cur.{a}").alias(a) for a in attrs],
-        F.col("cur.create_job_run_id").alias("create_job_run_id"),
-        F.lit(run_id).cast("long").alias("update_job_run_id"),
-        F.lit("0").alias("record_status"),
-    )
-    opened_now = joined.filter(changed).select(
-        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns]
-    )
-    brand_new = joined.filter(~cur_present).select(
-        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns]
-    )
-    disappeared = joined.filter(~inc_present).select(
-        *[F.col(f"cur.{c}").alias(c) for c in current.columns]
-    )
-    return (
-        cur_closed.unionByName(keep_open)
-        .unionByName(disappeared)
-        .unionByName(closed_now)
-        .unionByName(opened_now)
-        .unionByName(brand_new)
-    )
+    merged = joined.select(F.explode(out).alias("_r")).select("_r.*")
+    if scd_type == "1":
+        return merged
+    return current.filter(F.col("record_status") == "0").unionByName(merged)
 
 
 # ---------------------------------------------------------------------------

@@ -513,6 +513,54 @@ def contiguity_violations(audit: DataFrame, order_col: str = "batch_id") -> Data
     )
 
 
+def _on_audit(e: F.Column) -> F.Column:
+    return F.when(F.col("_audit"), e)
+
+
+def _conservation_agg(
+    spark: SparkSession, audit: DataFrame, bronze_dirs: list[str], fmt: str,
+    *extra: F.Column,
+) -> DataFrame:
+    """The T3 sums and verdict, plus ``extra`` aggregates over the audit
+    rows, as ONE aggregate: the audit rows tagged ``_audit`` are unioned
+    with one untagged all-NULL row per landed bronze row. One job, where a
+    crossJoin of per-side aggregates runs the broadcast side's aggregate
+    as a job of its own."""
+    rows = audit.select(F.lit(True).alias("_audit"), *audit.columns)
+    if bronze_dirs:
+        # a row count reads no column: the empty schema skips the schema
+        # inference job (a footer read for parquet, a full scan for json)
+        landed = spark.read.format(fmt).schema(T.StructType()).load(list(bronze_dirs))
+        rows = rows.unionAll(
+            landed.select(
+                F.lit(False).alias("_audit"),
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in audit.schema],
+            )
+        )
+
+    def nonempty_sum(e: F.Column) -> F.Column:
+        return F.coalesce(F.sum(_on_audit(F.when(F.col("n_records") > 0, e))), F.lit(0))
+
+    agg = rows.agg(
+        nonempty_sum(F.col("until_offset") - F.col("from_offset") + 1).alias(
+            "expected_offsets"
+        ),
+        nonempty_sum(F.col("n_records")).alias("audited_records"),
+        F.count(F.when(~F.col("_audit"), 1)).alias("landed_rows"),
+        *extra,
+    )
+    status = (
+        F.when(
+            (F.col("expected_offsets") == F.col("audited_records"))
+            & (F.col("audited_records") == F.col("landed_rows")),
+            F.lit("PASS"),
+        )
+        .otherwise(F.lit("FAIL"))
+        .alias("status")
+    )
+    return agg.select(*agg.columns[:3], status, *agg.columns[3:])
+
+
 def conservation_check(
     spark: SparkSession, audit: DataFrame, bronze_dirs: list[str],
     fmt: str = "parquet",
@@ -522,31 +570,7 @@ def conservation_check(
     a one-row lazy frame (expected_offsets, audited_records, landed_rows,
     status). ``fmt`` must match the ``run_file_ingest`` fmt that wrote the
     bronze dirs (a json/csv ingest is re-read as json/csv)."""
-    sums = audit.filter(F.col("n_records") > 0).agg(
-        F.coalesce(
-            F.sum(F.col("until_offset") - F.col("from_offset") + 1), F.lit(0)
-        ).alias("expected_offsets"),
-        F.coalesce(F.sum("n_records"), F.lit(0)).alias("audited_records"),
-    )
-    if bronze_dirs:
-        landed = (
-            spark.read.format(fmt).load(list(bronze_dirs))
-            .agg(F.count(F.lit(1)).alias("landed_rows"))
-        )
-    else:
-        landed = spark.range(1).select(F.lit(0).cast("long").alias("landed_rows"))
-    return sums.crossJoin(landed).select(
-        "expected_offsets",
-        "audited_records",
-        "landed_rows",
-        F.when(
-            (F.col("expected_offsets") == F.col("audited_records"))
-            & (F.col("audited_records") == F.col("landed_rows")),
-            F.lit("PASS"),
-        )
-        .otherwise(F.lit("FAIL"))
-        .alias("status"),
-    )
+    return _conservation_agg(spark, audit, bronze_dirs, fmt)
 
 
 def streaming_contract_summary(
@@ -567,44 +591,28 @@ def streaming_contract_summary(
       file written for an empty batch (T4,
       Kafka_ArrivalToConform.sh:286-318).
 
-    Both aggregate frames are one row; the crossJoin is a constant-size
-    broadcast, never a data-plane cartesian."""
-    t = audit.agg(
-        F.count(F.lit(1)).alias("n_batches"),
-        F.sum(F.when(F.col("n_records") == 0, 1).otherwise(0))
+    The T1/T4 columns ride the conservation check's single aggregate; no
+    join."""
+
+    def none_of(bad: F.Column) -> F.Column:
+        return F.when(
+            F.sum(_on_audit(F.when(bad, 1).otherwise(0))) == 0, F.lit("PASS")
+        ).otherwise(F.lit("FAIL"))
+
+    return _conservation_agg(
+        spark, audit, bronze_dirs, fmt,
+        F.count(_on_audit(F.lit(1))).alias("n_batches"),
+        F.sum(_on_audit(F.when(F.col("n_records") == 0, 1).otherwise(0)))
         .cast("long")
         .alias("n_empty_batches"),
-        F.when(
-            F.sum(
-                F.when(
-                    F.col("batch_seconds").isNull()
-                    | (F.col("batch_seconds") < 0),
-                    1,
-                ).otherwise(0)
-            )
-            == 0,
-            F.lit("PASS"),
-        )
-        .otherwise(F.lit("FAIL"))
-        .alias("t1_durations"),
-        F.when(
-            F.sum(
-                F.when(
-                    (F.col("n_records") == 0)
-                    & (
-                        (F.col("file_processing_status") != 0)
-                        | (F.col("file_name") != "")
-                    ),
-                    1,
-                ).otherwise(0)
-            )
-            == 0,
-            F.lit("PASS"),
-        )
-        .otherwise(F.lit("FAIL"))
-        .alias("t4_suppression"),
+        none_of(F.col("batch_seconds").isNull() | (F.col("batch_seconds") < 0)).alias(
+            "t1_durations"
+        ),
+        none_of(
+            (F.col("n_records") == 0)
+            & ((F.col("file_processing_status") != 0) | (F.col("file_name") != ""))
+        ).alias("t4_suppression"),
     )
-    return conservation_check(spark, audit, bronze_dirs, fmt).crossJoin(t)
 
 
 def exactly_once_dedup(

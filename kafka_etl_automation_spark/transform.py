@@ -11,13 +11,14 @@ reference runs per job (/root/reference/KafkaScript_ConformToStaging.sh):
   3. land the batch in the target layer under this run's partition —
      idempotent on re-run (M1/M3)
   4. validate with the DQ suite and log PASS/FAIL audit rows (Q1/S9,
-     fact_dim_merging.sh:107-110)
+     fact_dim_merging.sh:107-110): the suite runs once, and the audit
+     rows are the collected suite rows, not a second run of its plan
   5. mark the run complete and advance the high-water mark (:186-199)
 
 Scale: the control-plane steps are tiny metadata ops; the data-plane read
 is a single windowed scan -> partitioned write, fully parallel. Nothing
-here collects data to the driver (the DQ one-row results are the only
-.first() calls, on single-row frames).
+here collects data to the driver (the DQ suite's result rows, one per
+check, are the only collect).
 """
 
 from __future__ import annotations
@@ -90,7 +91,9 @@ def incremental_load(
         int(r.metric_b) for r in rows if r.check_name.endswith("_count")
     )
     if audit_path:
-        quality.append_audit(checks, audit_path, run_id)
+        quality.append_audit(
+            quality.collected_results(spark, rows, checks.schema), audit_path, run_id
+        )
 
     registry.finish_run(job_name, run_id, status=1 if passed else 2, records=records)
     if passed:

@@ -16,6 +16,11 @@ def test_count_check(spark):
     assert (ok.status, ok.metric_a, ok.metric_b) == ("PASS", 10, 10)
     bad = quality.count_check(a, b).first()
     assert (bad.status, bad.metric_a, bad.metric_b) == ("FAIL", 10, 9)
+    empty = spark.range(0)
+    both = quality.count_check(empty, empty).first()
+    assert (both.status, both.metric_a, both.metric_b) == ("PASS", 0, 0)
+    one = quality.count_check(empty, b).first()
+    assert (one.status, one.metric_a, one.metric_b) == ("FAIL", 0, 9)
 
 
 def test_data_diff_distinct_semantics(spark):

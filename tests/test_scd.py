@@ -40,6 +40,34 @@ def test_type2_close_and_open(spark):
     assert cur.isEmpty()
 
 
+def test_type2_every_row_class(spark):
+    """One merge meets every row class: already closed (1/A), unchanged
+    (1/A2, 2), changed (3: close C, open C3), not in the feed (4, stays
+    open) and brand new (5)."""
+    d1 = scd.scd_merge(
+        None, snap(spark, [(1, "A"), (2, "B"), (3, "C"), (4, "D")]), ["k"], "2", 1
+    )
+    d2 = scd.scd_merge(
+        d1, snap(spark, [(1, "A2"), (2, "B"), (3, "C"), (4, "D")]), ["k"], "2", 2
+    )
+    d3 = scd.scd_merge(
+        d2, snap(spark, [(1, "A2"), (2, "B"), (3, "C3"), (5, "E")]), ["k"], "2", 3
+    )
+    rows = d3.select(
+        "k", "seg", "record_status", "create_job_run_id", "update_job_run_id"
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        (1, "A", "0", 1, 2),
+        (1, "A2", "1", 2, 2),
+        (2, "B", "1", 1, 1),
+        (3, "C", "0", 1, 3),
+        (3, "C3", "1", 3, 3),
+        (4, "D", "1", 1, 1),
+        (5, "E", "1", 3, 3),
+    ]
+    assert sorted(r.k for r in rows if r.record_status == "1") == [1, 2, 3, 4, 5]
+
+
 def test_type2_null_safe_change_detection(spark):
     d1 = scd.scd_merge(None, snap(spark, [(1, None)]), ["k"], "2", 1)
     # null -> null is NOT a change
@@ -81,6 +109,17 @@ def test_type1_overwrite_in_place(spark):
     assert s[(2, "1")] == ("C", 1, 2)  # attrs replaced, create preserved
     assert s[(3, "1")] == ("N", 2, 2)
     assert len(s) == 3  # no history rows in type 1
+
+
+def test_type1_null_business_key_no_fabricated_rows(spark):
+    """NULL keys never equi-match: the dim's NULL-key row stays as it was,
+    the incoming NULL-key row inserts, and no all-NULL rows appear."""
+    d1 = scd.scd_merge(None, snap(spark, [(None, "A"), (1, "B")]), ["k"], "1", 1)
+    d2 = scd.scd_merge(d1, snap(spark, [(None, "A2"), (1, "C")]), ["k"], "1", 2)
+    rows = d2.select("k", "seg", "create_job_run_id", "update_job_run_id").collect()
+    assert sorted(map(tuple, rows), key=repr) == sorted(
+        [(None, "A", 1, 1), (None, "A2", 2, 2), (1, "C", 1, 2)], key=repr
+    )
 
 
 def test_static_ignores_updates(spark):

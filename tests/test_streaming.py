@@ -188,6 +188,20 @@ def test_checkpoint_no_reprocessing(spark, tmp_root):
     assert ingest.contiguity_violations(audit, order_col="from_offset").isEmpty()
 
 
+def test_conservation_check_without_bronze_dirs(spark):
+    """With no bronze dirs nothing landed: an all-empty audit conserves,
+    an audited batch with no landed rows does not."""
+    empty_batch = ("t", 0, 0, None, None, 0, "", 0, 0.1)
+    audit = spark.createDataFrame([empty_batch], ingest.AUDIT_SCHEMA)
+    row = ingest.conservation_check(spark, audit, []).first()
+    assert tuple(row) == (0, 0, 0, "PASS")
+    lost = spark.createDataFrame(
+        [empty_batch, ("t", 0, 1, 0, 4, 5, "gone", 1, 0.1)], ingest.AUDIT_SCHEMA
+    )
+    row = ingest.conservation_check(spark, lost, []).first()
+    assert tuple(row) == (5, 5, 0, "FAIL")
+
+
 def test_contract_summary_json_fmt(spark, tmp_root):
     """streaming_contract_summary threads fmt through to the bronze re-read
     (a json ingest must not be re-read as parquet) and reports T1/T4."""

@@ -140,3 +140,56 @@ def test_two_loads_consume_disjoint_windows(spark, tmp_root):
     # DQ audit rows landed with run ids
     log = spark.read.parquet(audit)
     assert log.filter("status = 'PASS'").count() == log.count() and log.count() == 4
+
+
+def test_audit_rows_are_the_collected_suite(spark, tmp_root, monkeypatch):
+    """The audit table gets exactly the suite rows the load decided on,
+    stamped with the run id, for a PASS load and a FAIL load — and the
+    frame handed to the sink is built from those rows, not a second run
+    of the suite over the files."""
+    from kafka_etl_automation_spark import quality as q
+    from kafka_etl_automation_spark import transform as tf
+
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(10).select(
+        F.col("id"), F.lit(1).cast("long").alias("job_run_id")
+    )
+    staging = os.path.join(tmp_root, "staging")
+    audit = os.path.join(tmp_root, "audit")
+    _src_runs(reg, 1)
+
+    plans = []
+    real_append_audit = q.append_audit
+
+    def recording_append_audit(results, path, run_id=None):
+        plans.append(results._jdf.queryExecution().analyzed().toString())
+        real_append_audit(results, path, run_id)
+
+    monkeypatch.setattr(tf.quality, "append_audit", recording_append_audit)
+    real_count_check = q.count_check
+    monkeypatch.setattr(
+        tf.quality,
+        "count_check",
+        lambda src, tgt, name: real_count_check(src, tgt, name).withColumn(
+            "status", F.lit("FAIL")
+        ),
+    )
+    failed = tf.incremental_load(spark, reg, "stg", "conform", source, "job_run_id", staging, audit)
+    monkeypatch.setattr(tf.quality, "count_check", real_count_check)
+    passed = tf.incremental_load(spark, reg, "stg", "conform", source, "job_run_id", staging, audit)
+    assert not failed.dq_passed and passed.dq_passed
+
+    def suite(run_id, count_status):
+        return [
+            (f"stg_run{run_id}_count", count_status, 10, 10, run_id),
+            (f"stg_run{run_id}_runcol_notnull", "PASS", 0, 10, run_id),
+        ]
+
+    log = spark.read.parquet(audit).select(
+        "check_name", "status", "metric_a", "metric_b", "job_run_id"
+    )
+    assert sorted(tuple(r) for r in log.collect()) == sorted(
+        suite(failed.run_id, "FAIL") + suite(passed.run_id, "PASS")
+    )
+    assert len(plans) == 2
+    assert not any("Relation" in plan for plan in plans), plans

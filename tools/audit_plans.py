@@ -37,14 +37,11 @@ ALLOW = {
     "ext_cosine_topk": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     # single-row agg frames cross-joined into one result row — constant size
     "a9_count_minus": {"CartesianProduct", "BroadcastNestedLoopJoin"},
-    "q1_count_check": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     "q2_data_diff": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     "f5_timestamp_sanity": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     # scalar-subquery equality join: Catalyst plans the one-row subquery as
     # a broadcast nested loop — constant-size broadcast side, by design
     "j4_scalar_subquery_join": {"BroadcastNestedLoopJoin"},
-    # conservation check crossJoins two single-row agg frames
-    "stream_file_ingest": {"BroadcastNestedLoopJoin"},
     # documented exact all-pairs verifier (id_a < id_b inequality join);
     # the deployable path is the bucketed ext_lsh_embedding_near_dup
     "ext_embedding_near_dup": {"CartesianProduct", "BroadcastNestedLoopJoin"},
